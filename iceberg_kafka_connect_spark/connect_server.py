@@ -11,32 +11,18 @@ status shapes follow the public API so existing deployment tooling
 from __future__ import annotations
 
 import hmac
-import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 from urllib.parse import urlparse
 
 from .connect_worker import SINK_CLASS, ConnectError, ConnectWorker
+from .background import BackgroundServer, JsonHandler
 
 _VERSION = "3.5.1-spark-twin"
 
 
-class _Handler(BaseHTTPRequestHandler):
+class _Handler(JsonHandler):
     worker: ConnectWorker
     token: str | None
-
-    def log_message(self, *a):  # noqa: D102
-        pass
-
-    def _send(self, code: int, obj=None) -> None:
-        body = b"" if obj is None else json.dumps(obj).encode()
-        self.send_response(code)
-        if body:
-            self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        if body:
-            self.wfile.write(body)
 
     def _err(self, code: int, msg: str) -> None:
         self._send(code, {"error_code": code, "message": msg})
@@ -46,10 +32,6 @@ class _Handler(BaseHTTPRequestHandler):
             return True
         got = self.headers.get("Authorization", "")
         return hmac.compare_digest(got, f"Bearer {self.token}")
-
-    def _body(self) -> dict:
-        n = int(self.headers.get("Content-Length") or 0)
-        return json.loads(self.rfile.read(n) or b"{}")
 
     def _route(self, method: str) -> None:
         if not self._auth_ok():
@@ -171,8 +153,9 @@ class _Handler(BaseHTTPRequestHandler):
         self._route("DELETE")
 
 
-class ConnectRestServer:
-    """In-process Connect REST endpoint bound to a ConnectWorker."""
+class ConnectRestServer(BackgroundServer):
+    """In-process Connect REST endpoint bound to a ConnectWorker; serves
+    from construction, and stopping it shuts the worker down too."""
 
     def __init__(
         self,
@@ -184,28 +167,10 @@ class ConnectRestServer:
         handler = type(
             "_Bound", (_Handler,), {"worker": worker, "token": token}
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
+        super().__init__(ThreadingHTTPServer((host, port), handler))
         self.worker = worker
-        self._thread = threading.Thread(
-            # poll_interval: shutdown() blocks until the serve loop's next
-            # poll tick — the 0.5s default charges every gate that stops
-            # a server ~0.25s of pure latency; 10ms polls are free
-            target=lambda: self._httpd.serve_forever(poll_interval=0.01), daemon=True
-        )
-        self._thread.start()
+        self.start()
 
-    @property
-    def uri(self) -> str:
-        h, p = self._httpd.server_address[:2]
-        return f"http://{h}:{p}"
-
-    def close(self) -> None:
+    def stop(self) -> None:
         self.worker.shutdown()
-        self._httpd.shutdown()
-        self._httpd.server_close()
-
-    def __enter__(self) -> "ConnectRestServer":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+        super().stop()

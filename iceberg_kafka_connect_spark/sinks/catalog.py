@@ -95,6 +95,13 @@ class CatalogSpec:
             hadoop_conf_dir=props.get("iceberg.hadoop-conf-dir"),
         )
 
+    def _local_warehouse(self) -> str | None:
+        """The warehouse as a local path: ``file:///wh`` and ``file:/wh``
+        both become ``/wh``."""
+        from .pointer_catalog import _uri_to_path
+
+        return self.warehouse and _uri_to_path(self.warehouse)
+
     def build(self) -> "Catalog":
         """Build the catalog — the executable path is the directory-backed
         warehouse (Iceberg's `hadoop` catalog shape); everything else names
@@ -104,11 +111,7 @@ class CatalogSpec:
                 raise ValueError(
                     "hadoop catalog requires iceberg.catalog.warehouse"
                 )
-            wh = self.warehouse
-            for prefix in ("file://", "file:"):
-                if wh.startswith(prefix):
-                    wh = wh[len(prefix) :]
-                    break
+            wh = self._local_warehouse()
             if "://" in wh:
                 raise UnsupportedCatalogError(
                     f"warehouse scheme not available in this deployment: "
@@ -132,14 +135,9 @@ class CatalogSpec:
                 )
             from .glue_catalog import GlueCatalog
 
-            wh = self.warehouse
-            for prefix in ("file://", "file:"):
-                if wh and wh.startswith(prefix):
-                    wh = wh[len(prefix) :]
-                    break
             return GlueCatalog(
                 uri,
-                warehouse=wh,
+                warehouse=self._local_warehouse(),
                 access_key=self.props.get("s3.access-key-id"),
                 secret_key=self.props.get("s3.secret-access-key"),
                 region=self.props.get("client.region", "us-east-1"),
@@ -163,14 +161,9 @@ class CatalogSpec:
                 )
             from .dynamodb_catalog import DynamoDbCatalog
 
-            wh = self.warehouse
-            for prefix in ("file://", "file:"):
-                if wh and wh.startswith(prefix):
-                    wh = wh[len(prefix) :]
-                    break
             return DynamoDbCatalog(
                 uri,
-                warehouse=wh,
+                warehouse=self._local_warehouse(),
                 table_name=self.props.get(
                     "dynamodb.table-name", "iceberg"
                 ),
@@ -203,13 +196,10 @@ class CatalogSpec:
                 raise ValueError("jdbc catalog requires iceberg.catalog.uri")
             from .jdbc_catalog import JdbcCatalog, parse_jdbc_uri
 
-            wh = self.warehouse
-            for prefix in ("file://", "file:"):
-                if wh and wh.startswith(prefix):
-                    wh = wh[len(prefix) :]
-                    break
             return JdbcCatalog(
-                parse_jdbc_uri(self.uri), warehouse=wh, catalog_name=self.name
+                parse_jdbc_uri(self.uri),
+                warehouse=self._local_warehouse(),
+                catalog_name=self.name,
             )
         if self.type == "nessie":
             # executable leg: speak the public Nessie REST API v2 to the
@@ -222,14 +212,9 @@ class CatalogSpec:
                 )
             from .nessie_catalog import NessieCatalog
 
-            wh = self.warehouse
-            for prefix in ("file://", "file:"):
-                if wh and wh.startswith(prefix):
-                    wh = wh[len(prefix) :]
-                    break
             return NessieCatalog(
                 self.uri,
-                warehouse=wh,
+                warehouse=self._local_warehouse(),
                 ref=self.props.get("ref", "main"),
                 token=self.props.get("token"),
             )
@@ -250,12 +235,7 @@ class CatalogSpec:
                 )
             from .hive_catalog import HiveCatalog
 
-            wh = self.warehouse
-            for prefix in ("file://", "file:"):
-                if wh and wh.startswith(prefix):
-                    wh = wh[len(prefix) :]
-                    break
-            return HiveCatalog(self.uri, warehouse=wh)
+            return HiveCatalog(self.uri, warehouse=self._local_warehouse())
         if self.type in _KNOWN_CATALOG_TYPES:
             raise UnsupportedCatalogError(
                 f"catalog type {self.type!r} requires an external service "

@@ -14,9 +14,11 @@ on every write — the optimistic lock: pointer swaps are ``UpdateItem``
 calls conditional on the expected ``v``, so a racing writer's stale
 version fails the conditional check exactly like Iceberg's.
 
-Pointer publication mirrors ``jdbc_catalog``/``nessie_catalog``: the
-metadata location is a real exported ``metadata.json``, republished
-sync-on-read when the live table moved past it.
+The pointer protocol (sync-on-read republish, create, drop) is
+``pointer_catalog.PointerCatalog``'s; this leg supplies its primitives —
+``GetItem`` / the version-conditional ``UpdateItem`` / the
+``attribute_not_exists`` ``PutItem`` / ``DeleteItem`` / the GSI
+``Query`` — and renames as put-destination then delete-source.
 
 ``dynamodb_server.DynamoDbServer`` is the in-process service twin; with
 credentials set it VERIFIES each request's SigV4 signature, so this
@@ -27,28 +29,23 @@ same way — only the endpoint differs.
 from __future__ import annotations
 
 import json
-import os
+import time
 import urllib.error
 import urllib.request
 import uuid
 from urllib.parse import urlparse
 
-from pyspark.sql import types as T
-
-from .catalog import NoSuchTableError, TableAlreadyExistsError
+from .catalog import TableAlreadyExistsError
 from .dynamodb_server import sign_aws_request
+from .pointer_catalog import PointerCatalog
 from .table import CommitConflict, LakehouseTable
 
 _NAMESPACE_MARK = "NAMESPACE"
 
 
-def _uri_to_path(uri: str) -> str:
-    if uri.startswith("file://"):
-        return uri[len("file://") :]
-    return uri
+class DynamoDbCatalog(PointerCatalog):
+    kind = "dynamodb"
 
-
-class DynamoDbCatalog:
     def __init__(
         self,
         uri: str,
@@ -150,35 +147,31 @@ class DynamoDbCatalog:
         except TableAlreadyExistsError:
             pass  # shared catalog table — expected
 
-    # ------------------------------------------------------------ identity
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        parts = name.split(".")
-        if len(parts) == 1:
-            parts = ["default", parts[0]]
-        return ".".join(parts[:-1]), parts[-1]
-
+    # ------------------------------------------------------------ pointers
     def _item_key(self, ns: str, t: str) -> dict:
         return {
             "identifier": {"S": f"{ns}.{t}"},
             "namespace": {"S": ns},
         }
 
-    def _get_item(self, ns: str, t: str) -> dict | None:
-        out = self._call(
-            "GetItem",
-            {"TableName": self.table_name, "Key": self._item_key(ns, t)},
-        )
-        return out.get("Item")
-
     def _pointer(self, ns: str, t: str) -> tuple[str, str] | None:
         """(metadata_location, version) or None."""
-        item = self._get_item(ns, t)
+        item = self._call(
+            "GetItem",
+            {"TableName": self.table_name, "Key": self._item_key(ns, t)},
+        ).get("Item")
         if item is None:
             return None
         return item["p.metadata_location"]["S"], item["v"]["S"]
 
-    def _insert_pointer(self, name: str, ns: str, t: str, loc: str) -> None:
+    def _get_pointer(self, ns: str, t: str):
+        """The CAS token is the whole (location, version) pair."""
+        ptr = self._pointer(ns, t)
+        return None if ptr is None else (ptr[0], ptr)
+
+    def _insert_pointer(
+        self, name: str, ns: str, t: str, loc: str, table=None
+    ) -> None:
         try:
             self._call(
                 "PutItem",
@@ -229,124 +222,20 @@ class DynamoDbCatalog:
             },
         )
 
-    def _publish(
-        self, table: LakehouseTable, ns: str, t: str, old: tuple[str, str]
-    ) -> str:
-        from .iceberg_export import export_iceberg_metadata
+    def _cas_pointer(self, ns: str, t: str, token, new: str) -> None:
+        self._swap_pointer(ns, t, *token, new)
 
-        new = "file://" + os.path.abspath(export_iceberg_metadata(table))
-        self._swap_pointer(ns, t, old[0], old[1], new)
-        return new
-
-    # ------------------------------------------------------------- surface
-    def table_exists(self, name: str) -> bool:
-        ns, t = self._ident(name)
-        return self._pointer(ns, t) is not None
-
-    def load_table(self, name: str) -> LakehouseTable:
-        ns, t = self._ident(name)
-        ptr = self._pointer(ns, t)
-        if ptr is None:
-            raise NoSuchTableError(name)
-        with open(_uri_to_path(ptr[0])) as f:
-            meta = json.load(f)
-        table = LakehouseTable(_uri_to_path(meta["location"]))
-        stamped = meta.get("properties", {}).get("export.source-version")
-        if stamped != str(table.current_version()):
-            try:
-                self._publish(table, ns, t, ptr)
-            except CommitConflict:
-                pass  # concurrent republish is just as fresh
-        return table
-
-    def load_table_metadata(self, name: str) -> tuple[str, dict]:
-        ns, t = self._ident(name)
-        self.load_table(name)  # republish if stale
-        ptr = self._pointer(ns, t)
-        if ptr is None:
-            raise NoSuchTableError(name)
-        with open(_uri_to_path(ptr[0])) as f:
-            return ptr[0], json.load(f)
-
-    def create_table(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if not self.warehouse:
-            raise ValueError(
-                "dynamodb catalog requires iceberg.catalog.warehouse to "
-                "create tables"
-            )
-        ns, t = self._ident(name)
-        if self._pointer(ns, t) is not None:
-            raise TableAlreadyExistsError(name)
-        root = os.path.join(self.warehouse, *ns.split("."), t)
-        try:
-            table = LakehouseTable.create(
-                root, schema, partition_by, properties, identifier_fields
-            )
-        except (CommitConflict, FileExistsError):
-            raise TableAlreadyExistsError(name) from None
-        from .iceberg_export import export_iceberg_metadata
-
-        loc = "file://" + os.path.abspath(export_iceberg_metadata(table))
-        self._insert_pointer(name, ns, t, loc)
-        return table
-
-    def create_table_if_not_exists(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if self.table_exists(name):
-            return self.load_table(name)
-        try:
-            return self.create_table(
-                name, schema, partition_by, properties, identifier_fields
-            )
-        except TableAlreadyExistsError:
-            return self.load_table(name)
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        ns, t = self._ident(name)
-        ptr = self._pointer(ns, t)
-        if ptr is None:
-            raise NoSuchTableError(name)
+    def _delete_pointer(self, ns: str, t: str) -> None:
         self._call(
             "DeleteItem",
             {"TableName": self.table_name, "Key": self._item_key(ns, t)},
         )
-        if purge:
-            import shutil
 
-            with open(_uri_to_path(ptr[0])) as f:
-                meta = json.load(f)
-            shutil.rmtree(_uri_to_path(meta["location"]), ignore_errors=True)
-
+    # ------------------------------------------------------------- surface
     def rename_table(self, src: str, dst: str) -> LakehouseTable:
         """Pointer move: conditional put of the destination, then delete
-        of the source (Iceberg's DynamoDbCatalog shape — the put's
-        attribute_not_exists condition keeps the destination safe; a
-        crash between the two ops leaves both names readable, never
-        neither)."""
-        sns, st = self._ident(src)
-        dns, dt = self._ident(dst)
-        ptr = self._pointer(sns, st)
-        if ptr is None:
-            raise NoSuchTableError(src)
-        self._insert_pointer(dst, dns, dt, ptr[0])
-        self._call(
-            "DeleteItem",
-            {"TableName": self.table_name, "Key": self._item_key(sns, st)},
-        )
-        return self.load_table(dst)
+        of the source (Iceberg's DynamoDbCatalog shape)."""
+        return self._move_pointer(src, dst)
 
     def list_tables(self, namespace: str = "default") -> list[str]:
         out = self._call(
@@ -367,6 +256,4 @@ class DynamoDbCatalog:
 
 
 def _now_ms() -> str:
-    import time
-
     return str(int(time.time() * 1000))

@@ -33,8 +33,10 @@ import hashlib
 import hmac
 import json
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 from urllib.parse import urlparse
+
+from ..background import BackgroundServer, JsonHandler
 
 
 # --------------------------------------------------------------- sigv4
@@ -329,22 +331,16 @@ _OPS = {
 }
 
 
-class _Handler(BaseHTTPRequestHandler):
+class _Handler(JsonHandler):
     store: _Store
     access_key: str | None = None
     secret_key: str | None = None
     region: str = "us-east-1"
-
-    def log_message(self, *a):  # noqa: D102
-        pass
-
-    def _send(self, code: int, obj: dict) -> None:
-        body = json.dumps(obj).encode()
-        self.send_response(code)
-        self.send_header("Content-Type", "application/x-amz-json-1.0")
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
+    content_type = "application/x-amz-json-1.0"
+    # the JSON-protocol service this handler dispatches to
+    ops = _OPS
+    error = _DynamoError
+    error_namespace = "com.amazonaws.dynamodb.v20120810"
 
     def _verify_sigv4(self, payload: bytes) -> str | None:
         """None when the signature checks out, else the failure reason."""
@@ -405,7 +401,7 @@ class _Handler(BaseHTTPRequestHandler):
                 )
         target = self.headers.get("X-Amz-Target", "")
         op = target.rpartition(".")[2]
-        fn = _OPS.get(op)
+        fn = self.ops.get(op)
         if fn is None:
             return self._send(
                 400,
@@ -417,11 +413,11 @@ class _Handler(BaseHTTPRequestHandler):
         try:
             body = json.loads(payload or b"{}")
             return self._send(200, fn(self.store, body))
-        except _DynamoError as e:
+        except self.error as e:
             return self._send(
                 400,
                 {
-                    "__type": f"com.amazonaws.dynamodb.v20120810#{e.code}",
+                    "__type": f"{self.error_namespace}#{e.code}",
                     "message": str(e),
                 },
             )
@@ -435,7 +431,7 @@ class _Handler(BaseHTTPRequestHandler):
             )
 
 
-class DynamoDbServer:
+class DynamoDbServer(BackgroundServer):
     """In-process DynamoDB-API stub. With ``access_key``/``secret_key``
     set, every request's SigV4 signature is VERIFIED."""
 
@@ -458,33 +454,4 @@ class DynamoDbServer:
                 "region": region,
             },
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
-        self._httpd.daemon_threads = True
-        self._thread: threading.Thread | None = None
-
-    @property
-    def uri(self) -> str:
-        h, p = self._httpd.server_address[:2]
-        return f"http://{h}:{p}"
-
-    def start(self) -> "DynamoDbServer":
-        self._thread = threading.Thread(
-            # poll_interval: shutdown() blocks until the serve loop's next
-            # poll tick — the 0.5s default charges every gate that stops
-            # a server ~0.25s of pure latency; 10ms polls are free
-            target=lambda: self._httpd.serve_forever(poll_interval=0.01), daemon=True
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-
-    def __enter__(self) -> "DynamoDbServer":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
+        super().__init__(ThreadingHTTPServer((host, port), handler))

@@ -12,35 +12,31 @@ Glue's optimistic lock: a concurrent writer bumps the version and the
 stale committer fails with ``ConcurrentModificationException``, the
 lock-free protocol Iceberg uses on Glue.
 
-Pointer publication mirrors the other pointer catalogs (jdbc / nessie /
-dynamodb): real exported ``metadata.json`` locations, republished
-sync-on-read when the live table moved. ``glue_server.GlueServer`` is
-the in-process twin; with credentials set it VERIFIES each request's
-SigV4 signature.
+The pointer protocol (sync-on-read republish, create, drop) is
+``pointer_catalog.PointerCatalog``'s; this leg supplies its primitives —
+``GetTable`` / the ``VersionId``-carrying ``UpdateTable`` / ``CreateTable``
+(after ensuring the database) / ``DeleteTable`` / ``GetTables`` — and
+renames as create-destination then delete-source.
+``glue_server.GlueServer`` is the in-process twin; with credentials set
+it VERIFIES each request's SigV4 signature.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import urllib.error
 import urllib.request
 from urllib.parse import urlparse
 
-from pyspark.sql import types as T
-
 from .catalog import NoSuchTableError, TableAlreadyExistsError
 from .dynamodb_server import sign_aws_request
+from .pointer_catalog import PointerCatalog
 from .table import CommitConflict, LakehouseTable
 
 
-def _uri_to_path(uri: str) -> str:
-    if uri.startswith("file://"):
-        return uri[len("file://") :]
-    return uri
+class GlueCatalog(PointerCatalog):
+    kind = "glue"
 
-
-class GlueCatalog:
     def __init__(
         self,
         uri: str,
@@ -101,14 +97,7 @@ class GlueCatalog:
                 f"glue {op}: {e.code} {err.get('message', err)}"
             ) from None
 
-    # ------------------------------------------------------------ identity
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        parts = name.split(".")
-        if len(parts) == 1:
-            parts = ["default", parts[0]]
-        return ".".join(parts[:-1]), parts[-1]
-
+    # ------------------------------------------------------------ pointers
     def _ensure_database(self, db: str) -> None:
         try:
             self._call("GetDatabase", {"Name": db})
@@ -141,12 +130,14 @@ class GlueCatalog:
             },
         }
 
-    def _publish(
-        self, table: LakehouseTable, db: str, t: str, cur: dict
-    ) -> str:
-        from .iceberg_export import export_iceberg_metadata
+    def _get_pointer(self, db: str, t: str) -> tuple[str, dict] | None:
+        """The CAS token is the whole Glue table (VersionId + location)."""
+        cur = self._get(db, t)
+        if cur is None:
+            return None
+        return cur["Parameters"]["metadata_location"], cur
 
-        new = "file://" + os.path.abspath(export_iceberg_metadata(table))
+    def _cas_pointer(self, db: str, t: str, cur: dict, new: str) -> None:
         self._call(
             "UpdateTable",
             {
@@ -158,67 +149,11 @@ class GlueCatalog:
                 "VersionId": cur["VersionId"],
             },
         )
-        return new
 
-    # ------------------------------------------------------------- surface
-    def table_exists(self, name: str) -> bool:
-        db, t = self._ident(name)
-        return self._get(db, t) is not None
-
-    def load_table(self, name: str) -> LakehouseTable:
-        db, t = self._ident(name)
-        cur = self._get(db, t)
-        if cur is None:
-            raise NoSuchTableError(name)
-        loc = cur["Parameters"]["metadata_location"]
-        with open(_uri_to_path(loc)) as f:
-            meta = json.load(f)
-        table = LakehouseTable(_uri_to_path(meta["location"]))
-        stamped = meta.get("properties", {}).get("export.source-version")
-        if stamped != str(table.current_version()):
-            try:
-                self._publish(table, db, t, cur)
-            except CommitConflict:
-                pass  # concurrent republish is just as fresh
-        return table
-
-    def load_table_metadata(self, name: str) -> tuple[str, dict]:
-        db, t = self._ident(name)
-        self.load_table(name)  # republish if stale
-        cur = self._get(db, t)
-        if cur is None:
-            raise NoSuchTableError(name)
-        loc = cur["Parameters"]["metadata_location"]
-        with open(_uri_to_path(loc)) as f:
-            return loc, json.load(f)
-
-    def create_table(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if not self.warehouse:
-            raise ValueError(
-                "glue catalog requires iceberg.catalog.warehouse to "
-                "create tables"
-            )
-        db, t = self._ident(name)
+    def _insert_pointer(
+        self, name: str, db: str, t: str, loc: str, table=None
+    ) -> None:
         self._ensure_database(db)
-        if self._get(db, t) is not None:
-            raise TableAlreadyExistsError(name)
-        root = os.path.join(self.warehouse, *db.split("."), t)
-        try:
-            table = LakehouseTable.create(
-                root, schema, partition_by, properties, identifier_fields
-            )
-        except (CommitConflict, FileExistsError):
-            raise TableAlreadyExistsError(name) from None
-        from .iceberg_export import export_iceberg_metadata
-
-        loc = "file://" + os.path.abspath(export_iceberg_metadata(table))
         self._call(
             "CreateTable",
             {
@@ -226,63 +161,16 @@ class GlueCatalog:
                 "TableInput": self._table_input(t, loc, None),
             },
         )
-        return table
 
-    def create_table_if_not_exists(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if self.table_exists(name):
-            return self.load_table(name)
-        try:
-            return self.create_table(
-                name, schema, partition_by, properties, identifier_fields
-            )
-        except TableAlreadyExistsError:
-            return self.load_table(name)
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        db, t = self._ident(name)
-        cur = self._get(db, t)
-        if cur is None:
-            raise NoSuchTableError(name)
+    def _delete_pointer(self, db: str, t: str) -> None:
         self._call("DeleteTable", {"DatabaseName": db, "Name": t})
-        if purge:
-            import shutil
 
-            with open(
-                _uri_to_path(cur["Parameters"]["metadata_location"])
-            ) as f:
-                meta = json.load(f)
-            shutil.rmtree(_uri_to_path(meta["location"]), ignore_errors=True)
-
+    # ------------------------------------------------------------- surface
     def rename_table(self, src: str, dst: str) -> LakehouseTable:
         """Glue has no rename — Iceberg's GlueCatalog does create-new +
         delete-old the same way; the create's AlreadyExists check keeps
         the destination safe."""
-        sdb, st = self._ident(src)
-        ddb, dt = self._ident(dst)
-        cur = self._get(sdb, st)
-        if cur is None:
-            raise NoSuchTableError(src)
-        if self._get(ddb, dt) is not None:
-            raise TableAlreadyExistsError(dst)
-        self._ensure_database(ddb)
-        self._call(
-            "CreateTable",
-            {
-                "DatabaseName": ddb,
-                "TableInput": self._table_input(
-                    dt, cur["Parameters"]["metadata_location"], None
-                ),
-            },
-        )
-        self._call("DeleteTable", {"DatabaseName": sdb, "Name": st})
-        return self.load_table(dst)
+        return self._move_pointer(src, dst)
 
     def list_tables(self, namespace: str = "default") -> list[str]:
         out = self._call("GetTables", {"DatabaseName": namespace})

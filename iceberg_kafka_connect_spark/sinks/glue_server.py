@@ -24,10 +24,10 @@ DynamoDB stub), so the client's signer is exercised, not assumed.
 
 from __future__ import annotations
 
-import json
 import threading
 from http.server import ThreadingHTTPServer
 
+from ..background import BackgroundServer
 from .dynamodb_server import _Handler as _SigV4Handler
 
 
@@ -145,55 +145,15 @@ _OPS = {
 
 
 class _Handler(_SigV4Handler):
-    """Reuses the DynamoDB stub's SigV4 verifier; only the op table and
-    error namespace differ."""
+    """The DynamoDB stub's SigV4 verifier and dispatch; only the op table
+    and error namespace differ."""
 
-    def do_POST(self):  # noqa: N802
-        n = int(self.headers.get("Content-Length") or 0)
-        payload = self.rfile.read(n)
-        if self.access_key is not None:
-            reason = self._verify_sigv4(payload)
-            if reason:
-                return self._send(
-                    403,
-                    {
-                        "__type": "com.amazon.coral.service#"
-                        "InvalidSignatureException",
-                        "message": reason,
-                    },
-                )
-        target = self.headers.get("X-Amz-Target", "")
-        op = target.rpartition(".")[2]
-        fn = _OPS.get(op)
-        if fn is None:
-            return self._send(
-                400,
-                {
-                    "__type": "com.amazon.coral.service#UnknownOperation",
-                    "message": f"unsupported operation {op!r}",
-                },
-            )
-        try:
-            return self._send(200, fn(self.store, json.loads(payload or b"{}")))
-        except _GlueError as e:
-            return self._send(
-                400,
-                {
-                    "__type": f"com.amazonaws.glue#{e.code}",
-                    "message": str(e),
-                },
-            )
-        except Exception as e:  # noqa: BLE001
-            return self._send(
-                400,
-                {
-                    "__type": "com.amazon.coral.service#ValidationException",
-                    "message": f"{type(e).__name__}: {e}",
-                },
-            )
+    ops = _OPS
+    error = _GlueError
+    error_namespace = "com.amazonaws.glue"
 
 
-class GlueServer:
+class GlueServer(BackgroundServer):
     """In-process Glue Data Catalog stub; verifies SigV4 when
     credentials are set."""
 
@@ -216,33 +176,4 @@ class GlueServer:
                 "region": region,
             },
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
-        self._httpd.daemon_threads = True
-        self._thread: threading.Thread | None = None
-
-    @property
-    def uri(self) -> str:
-        h, p = self._httpd.server_address[:2]
-        return f"http://{h}:{p}"
-
-    def start(self) -> "GlueServer":
-        self._thread = threading.Thread(
-            # poll_interval: shutdown() blocks until the serve loop's next
-            # poll tick — the 0.5s default charges every gate that stops
-            # a server ~0.25s of pure latency; 10ms polls are free
-            target=lambda: self._httpd.serve_forever(poll_interval=0.01), daemon=True
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-
-    def __enter__(self) -> "GlueServer":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
+        super().__init__(ThreadingHTTPServer((host, port), handler))

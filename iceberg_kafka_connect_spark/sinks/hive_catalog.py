@@ -19,16 +19,18 @@ thrift_proto.py) with Iceberg's HiveTableOperations commit protocol:
 
 Table shape per Iceberg-on-Hive: an EXTERNAL_TABLE whose parameters
 carry ``table_type=ICEBERG`` + ``metadata_location``, columns mirrored
-into the StorageDescriptor for HMS browsers. Pointer publication
-matches the other pointer catalogs (glue / dynamodb / nessie / jdbc):
-real exported ``metadata.json`` locations, republished sync-on-read.
-``hive_server.HiveMetastoreServer`` is the in-process verifying twin.
+into the StorageDescriptor for HMS browsers. The pointer protocol
+(sync-on-read republish, create, drop) is
+``pointer_catalog.PointerCatalog``'s; this leg supplies its primitives
+— ``get_table`` / ``create_table`` (after ensuring the database) /
+``drop_table`` / ``get_all_tables`` — and overrides ``_publish`` with
+the locked commit above. ``hive_server.HiveMetastoreServer`` is the
+in-process verifying twin.
 """
 
 from __future__ import annotations
 
 import getpass
-import json
 import os
 import socket
 import time
@@ -43,11 +45,8 @@ from .hive_server import (
     LOCK_EXCLUSIVE,
     LOCK_WAITING,
 )
+from .pointer_catalog import PointerCatalog
 from .table import CommitConflict, LakehouseTable
-
-
-def _uri_to_path(uri: str) -> str:
-    return uri[len("file://") :] if uri.startswith("file://") else uri
 
 
 class HiveThriftError(RuntimeError):
@@ -167,7 +166,9 @@ def _field_schemas(schema: T.StructType) -> list[dict]:
     return out
 
 
-class HiveCatalog:
+class HiveCatalog(PointerCatalog):
+    kind = "hive"
+
     def __init__(
         self,
         uri: str,
@@ -183,14 +184,7 @@ class HiveCatalog:
         self.lock_check_interval = lock_check_interval
         self.lock_timeout = lock_timeout
 
-    # ------------------------------------------------------------ identity
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        parts = name.split(".")
-        if len(parts) == 1:
-            parts = ["default", parts[0]]
-        return ".".join(parts[:-1]), parts[-1]
-
+    # ------------------------------------------------------------ pointers
     def _ensure_database(self, db: str) -> None:
         try:
             self._client.call("get_database", {1: tp.t_str(db)})
@@ -214,6 +208,29 @@ class HiveCatalog:
     @staticmethod
     def _params(tbl: dict | None) -> dict:
         return (tbl or {}).get(9) or {}
+
+    def _get_pointer(self, db: str, t: str) -> tuple[str, dict] | None:
+        """The token is the whole HMS table: the locked commit compares
+        its metadata_location and keeps its mirrored columns."""
+        cur = self._get(db, t)
+        if cur is None:
+            return None
+        return self._params(cur).get("metadata_location"), cur
+
+    def _insert_pointer(
+        self, name: str, db: str, t: str, loc: str, table=None
+    ) -> None:
+        self._ensure_database(db)
+        struct = self._table_struct(
+            db, t, loc, None, table.schema(), table.root
+        )
+        self._client.call("create_table", {1: struct})
+
+    def _delete_pointer(self, db: str, t: str) -> None:
+        self._client.call(
+            "drop_table",
+            {1: tp.t_str(db), 2: tp.t_str(t), 3: tp.t_bool(False)},
+        )
 
     def _table_struct(
         self,
@@ -315,9 +332,7 @@ class HiveCatalog:
         """Iceberg's HiveTableOperations.doCommit: lock → re-read →
         compare base metadata_location → alter (with the expected-param
         CAS in the EnvironmentContext) → unlock."""
-        from .iceberg_export import export_iceberg_metadata
-
-        new = "file://" + os.path.abspath(export_iceberg_metadata(table))
+        new = self._export(table)
         base_loc = self._params(base).get("metadata_location")
         lid = self._acquire_lock(db, t)
         try:
@@ -358,107 +373,6 @@ class HiveCatalog:
         return new
 
     # ------------------------------------------------------------- surface
-    def table_exists(self, name: str) -> bool:
-        db, t = self._ident(name)
-        return self._get(db, t) is not None
-
-    def load_table(self, name: str) -> LakehouseTable:
-        db, t = self._ident(name)
-        cur = self._get(db, t)
-        if cur is None:
-            raise NoSuchTableError(name)
-        loc = self._params(cur).get("metadata_location")
-        with open(_uri_to_path(loc)) as f:
-            meta = json.load(f)
-        table = LakehouseTable(_uri_to_path(meta["location"]))
-        stamped = meta.get("properties", {}).get("export.source-version")
-        if stamped != str(table.current_version()):
-            try:
-                self._publish(table, db, t, cur)
-            except CommitConflict:
-                pass  # concurrent republish is just as fresh
-        return table
-
-    def load_table_metadata(self, name: str) -> tuple[str, dict]:
-        db, t = self._ident(name)
-        self.load_table(name)  # republish if stale
-        cur = self._get(db, t)
-        if cur is None:
-            raise NoSuchTableError(name)
-        loc = self._params(cur).get("metadata_location")
-        with open(_uri_to_path(loc)) as f:
-            return loc, json.load(f)
-
-    def create_table(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if not self.warehouse:
-            raise ValueError(
-                "hive catalog requires iceberg.catalog.warehouse to "
-                "create tables"
-            )
-        db, t = self._ident(name)
-        self._ensure_database(db)
-        if self._get(db, t) is not None:
-            raise TableAlreadyExistsError(name)
-        root = os.path.join(self.warehouse, *db.split("."), t)
-        try:
-            table = LakehouseTable.create(
-                root, schema, partition_by, properties, identifier_fields
-            )
-        except (CommitConflict, FileExistsError):
-            raise TableAlreadyExistsError(name) from None
-        from .iceberg_export import export_iceberg_metadata
-
-        loc = "file://" + os.path.abspath(export_iceberg_metadata(table))
-        self._client.call(
-            "create_table",
-            {1: self._table_struct(db, t, loc, None, schema, root)},
-        )
-        return table
-
-    def create_table_if_not_exists(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if self.table_exists(name):
-            return self.load_table(name)
-        try:
-            return self.create_table(
-                name, schema, partition_by, properties, identifier_fields
-            )
-        except TableAlreadyExistsError:
-            return self.load_table(name)
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        db, t = self._ident(name)
-        cur = self._get(db, t)
-        if cur is None:
-            raise NoSuchTableError(name)
-        self._client.call(
-            "drop_table",
-            {1: tp.t_str(db), 2: tp.t_str(t), 3: tp.t_bool(False)},
-        )
-        if purge:
-            import shutil
-
-            with open(
-                _uri_to_path(self._params(cur)["metadata_location"])
-            ) as f:
-                meta = json.load(f)
-            shutil.rmtree(
-                _uri_to_path(meta["location"]), ignore_errors=True
-            )
-
     def list_tables(self, namespace: str = "default") -> list[str]:
         names = self._client.call(
             "get_all_tables", {1: tp.t_str(namespace)}

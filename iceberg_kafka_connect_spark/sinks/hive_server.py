@@ -36,6 +36,7 @@ import socket
 import socketserver
 import threading
 
+from ..background import BackgroundServer
 from . import thrift_proto as tp
 
 # LockState / LockType / LockLevel enum values from hive_metastore.thrift
@@ -286,35 +287,19 @@ class _Handler(socketserver.StreamRequestHandler):
         return {}
 
 
-class HiveMetastoreServer:
+class HiveMetastoreServer(BackgroundServer):
     """Context-managed in-process HMS twin on an ephemeral port."""
 
     def __init__(self, host: str = "127.0.0.1"):
         self.store = _MetaStore()
-        self._srv = socketserver.ThreadingTCPServer(
-            (host, 0), _Handler, bind_and_activate=True
-        )
-        self._srv.daemon_threads = True
-        self._srv.store = self.store  # type: ignore[attr-defined]
-        self.host, self.port = self._srv.server_address
-        self._thread = threading.Thread(
-            # poll_interval: shutdown() blocks until the serve loop's next
-            # poll tick — the 0.5s default charges every gate that stops
-            # a server ~0.25s of pure latency; 10ms polls are free
-            target=lambda: self._srv.serve_forever(poll_interval=0.01), daemon=True
-        )
+        srv = socketserver.ThreadingTCPServer((host, 0), _Handler)
+        srv.store = self.store  # type: ignore[attr-defined]
+        super().__init__(srv)
+        self.host, self.port = srv.server_address
 
     @property
     def uri(self) -> str:
         return f"thrift://{self.host}:{self.port}"
-
-    def __enter__(self) -> "HiveMetastoreServer":
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
 
     # test hook
     def raw_socket(self) -> socket.socket:

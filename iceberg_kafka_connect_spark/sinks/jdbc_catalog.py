@@ -29,32 +29,24 @@ JDBC drivers named in the uri (postgresql, mysql, …) stay
 ``UnsupportedCatalogError`` — their runtimes genuinely aren't in this
 deployment.
 
-Pointer currency: rows point at exported Iceberg v2 metadata
-(``iceberg_export``), which stamps ``export.source-version`` — the
-Lakehouse metadata version at export time. ``load_table`` compares that
-stamp against the live table and republishes (export + CAS) when the
-table moved, so readers that only follow the catalog pointer — including
-external engines reading the ``metadata_location`` — always land on
-current metadata. Catalog cost stays O(1) rows + O(live files) metadata
-export per publish; no data IO ever.
+The refresh/commit protocol (sync-on-read republish, create, drop) is
+``pointer_catalog.PointerCatalog``'s; this leg supplies its primitives —
+SELECT / the CAS UPDATE above / INSERT / DELETE on ``iceberg_tables`` —
+and keeps what is JDBC-only: rows hold the RAW metadata path, rename
+moves the table directory (rolled back when the CAS loses), drop purges
+by default, and namespaces and SQL views have their own tables.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re as _re
 import shutil
 import sqlite3
 from contextlib import contextmanager
 
-from pyspark.sql import types as T
-
-from .catalog import (
-    NoSuchTableError,
-    TableAlreadyExistsError,
-    UnsupportedCatalogError,
-)
+from .catalog import TableAlreadyExistsError, UnsupportedCatalogError
+from .pointer_catalog import PointerCatalog, _read_json, _uri_to_path
 from .table import CommitConflict, LakehouseTable
 
 _TABLES_DDL = """
@@ -101,12 +93,7 @@ def parse_jdbc_uri(uri: str) -> str:
         rest = rest[len("jdbc:") :]
     driver, _, tail = rest.partition(":")
     if driver == "sqlite":
-        path = tail or rest
-        for prefix in ("file://", "file:"):
-            if path.startswith(prefix):
-                path = path[len(prefix) :]
-                break
-        return path
+        return _uri_to_path(tail or rest)
     if "/" in driver or not tail:
         # no driver segment at all — treat the uri as a raw file path
         return rest
@@ -116,16 +103,12 @@ def parse_jdbc_uri(uri: str) -> str:
     )
 
 
-def _uri_to_path(uri: str) -> str:
-    for prefix in ("file://", "file:"):
-        if uri.startswith(prefix):
-            return uri[len(prefix) :]
-    return uri
-
-
-class JdbcCatalog:
+class JdbcCatalog(PointerCatalog):
     """Catalog over the Iceberg JDBC pointer schema; same surface as the
-    directory :class:`~.catalog.Catalog`."""
+    directory :class:`~.catalog.Catalog`. Pointer rows hold the raw
+    metadata path."""
+
+    kind = "jdbc"
 
     def __init__(
         self,
@@ -151,15 +134,6 @@ class JdbcCatalog:
         finally:
             con.close()
 
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        """(dotted namespace, table) — JdbcUtil stores multi-level
-        namespaces as the dotted string in `table_namespace`, same here."""
-        parts = name.split(".")
-        if len(parts) == 1:
-            parts = ["default", parts[0]]
-        return ".".join(parts[:-1]), parts[-1]
-
     # ------------------------------------------------------------ pointers
     def _pointer(self, ns: str, t: str) -> str | None:
         with self._conn() as con:
@@ -169,6 +143,10 @@ class JdbcCatalog:
                 (self.name, ns, t),
             ).fetchone()
         return row[0] if row else None
+
+    def _get_pointer(self, ns: str, t: str) -> tuple[str, str] | None:
+        loc = self._pointer(ns, t)
+        return None if loc is None else (loc, loc)
 
     def _swap_pointer(self, ns: str, t: str, old: str, new: str) -> None:
         with self._conn() as con:
@@ -184,14 +162,14 @@ class JdbcCatalog:
                 "another writer committed first"
             )
 
-    def _publish(self, table: LakehouseTable, ns: str, t: str, old: str) -> str:
-        from .iceberg_export import export_iceberg_metadata
+    _cas_pointer = _swap_pointer  # the CAS token is the old location
 
-        new = export_iceberg_metadata(table)
-        self._swap_pointer(ns, t, old, new)
-        return new
+    def _pointer_value(self, metadata_path: str) -> str:
+        return metadata_path
 
-    def _insert_pointer(self, name: str, ns: str, t: str, loc: str) -> None:
+    def _insert_pointer(
+        self, name: str, ns: str, t: str, loc: str, table=None
+    ) -> None:
         """First pointer row for a table; a racing INSERT loses on the
         primary key and surfaces as TableAlreadyExistsError (the loser's
         just-exported metadata tree under the shared root stays — it
@@ -209,141 +187,34 @@ class JdbcCatalog:
             raise TableAlreadyExistsError(name) from None
         self._ensure_namespace_row(ns)
 
-    # ------------------------------------------------------------- surface
-    def table_exists(self, name: str) -> bool:
-        ns, t = self._ident(name)
-        return self._pointer(ns, t) is not None
-
-    def load_table(self, name: str) -> LakehouseTable:
-        """Follow the pointer; republish first when the live table moved
-        past the pointed metadata (sync-on-read keeps external
-        pointer-followers current)."""
-        ns, t = self._ident(name)
-        loc = self._pointer(ns, t)
-        if loc is None:
-            raise NoSuchTableError(name)
-        with open(_uri_to_path(loc)) as f:
-            meta = json.load(f)
-        table = LakehouseTable(_uri_to_path(meta["location"]))
-        stamped = meta.get("properties", {}).get("export.source-version")
-        if stamped != str(table.current_version()):
-            try:
-                self._publish(table, ns, t, loc)
-            except CommitConflict:
-                pass  # someone else republished — theirs is fresh too
-        return table
-
-    def load_table_metadata(self, name: str) -> tuple[str, dict]:
-        """(metadata-location, Iceberg v2 metadata JSON) as currently
-        published — the external-engine view of the table."""
-        ns, t = self._ident(name)
-        self.load_table(name)  # republish if stale
-        loc = self._pointer(ns, t)
-        if loc is None:
-            raise NoSuchTableError(name)
-        with open(_uri_to_path(loc)) as f:
-            return loc, json.load(f)
-
-    def create_table(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if not self.warehouse:
-            raise ValueError(
-                "jdbc catalog requires iceberg.catalog.warehouse to create "
-                "tables"
-            )
-        ns, t = self._ident(name)
-        if self._pointer(ns, t) is not None:
-            raise TableAlreadyExistsError(name)
-        root = os.path.join(self.warehouse, *ns.split("."), t)
-        try:
-            table = LakehouseTable.create(
-                root, schema, partition_by, properties, identifier_fields
-            )
-        except (CommitConflict, FileExistsError):
-            raise TableAlreadyExistsError(name) from None
-        from .iceberg_export import export_iceberg_metadata
-
-        loc = export_iceberg_metadata(table)
-        self._insert_pointer(name, ns, t, loc)
-        return table
-
-    def register_table(
-        self, name: str, metadata_location: str
-    ) -> LakehouseTable:
-        """Iceberg ``registerTable`` parity: adopt an existing Iceberg
-        metadata tree — import (zero data copy) into the warehouse, then
-        publish the pointer row."""
-        from .iceberg_export import export_iceberg_metadata
-        from .iceberg_import import import_iceberg_table
-
-        if not self.warehouse:
-            raise ValueError(
-                "jdbc catalog requires iceberg.catalog.warehouse to "
-                "register tables"
-            )
-        ns, t = self._ident(name)
-        if self._pointer(ns, t) is not None:
-            raise TableAlreadyExistsError(name)
-        table = import_iceberg_table(
-            metadata_location, os.path.join(self.warehouse, *ns.split("."), t)
-        )
-        loc = export_iceberg_metadata(table)
-        self._insert_pointer(name, ns, t, loc)
-        return table
-
-    def create_table_if_not_exists(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if self.table_exists(name):
-            return self.load_table(name)
-        try:
-            return self.create_table(
-                name, schema, partition_by, properties, identifier_fields
-            )
-        except TableAlreadyExistsError:
-            return self.load_table(name)
-
-    def drop_table(self, name: str, purge: bool = True) -> None:
-        ns, t = self._ident(name)
-        loc = self._pointer(ns, t)
-        if loc is None:
-            raise NoSuchTableError(name)
+    def _delete_pointer(self, ns: str, t: str) -> None:
         with self._conn() as con:
             con.execute(
                 "DELETE FROM iceberg_tables WHERE catalog_name=? AND "
                 "table_namespace=? AND table_name=?",
                 (self.name, ns, t),
             )
-        if purge:
-            with open(_uri_to_path(loc)) as f:
-                root = _uri_to_path(json.load(f)["location"])
-            if os.path.isdir(root):
-                shutil.rmtree(root)
+
+    # ------------------------------------------------------------- surface
+    def register_table(
+        self, name: str, metadata_location: str
+    ) -> LakehouseTable:
+        """Iceberg ``registerTable`` parity (PointerCatalog._register)."""
+        return self._register(name, metadata_location)
+
+    def drop_table(self, name: str, purge: bool = True) -> None:
+        """JdbcCatalog purges the table's directory by default."""
+        super().drop_table(name, purge)
 
     def rename_table(self, src: str, dst: str) -> LakehouseTable:
         """Pointer rename + directory move. Exported metadata embeds
         absolute file URIs, so the move republishes fresh metadata for the
         new location before the pointer lands."""
-        sns, st = self._ident(src)
+        sns, st, loc, _ = self._pointer_of(src)
         dns, dt = self._ident(dst)
-        loc = self._pointer(sns, st)
-        if loc is None:
-            raise NoSuchTableError(src)
         if self._pointer(dns, dt) is not None:
             raise TableAlreadyExistsError(dst)
-        with open(_uri_to_path(loc)) as f:
-            old_root = _uri_to_path(json.load(f)["location"])
+        old_root = self._table_root(loc)
         new_root = (
             os.path.join(self.warehouse, *dns.split("."), dt)
             if self.warehouse
@@ -351,8 +222,6 @@ class JdbcCatalog:
         )
         os.makedirs(os.path.dirname(new_root), exist_ok=True)
         os.rename(old_root, new_root)
-        from .iceberg_export import export_iceberg_metadata
-
         table = LakehouseTable(new_root)
         # the export below rewrites version-hint.text; keep the prior
         # content so a CAS-failure rollback can restore it (r5 advice —
@@ -365,7 +234,7 @@ class JdbcCatalog:
         if os.path.isfile(hint_path):
             with open(hint_path) as f:
                 prev_hint = f.read()
-        new_loc = export_iceberg_metadata(table)
+        new_loc = self._export(table)
         with self._conn() as con:
             # CAS on the OLD metadata location: a concurrent drop/rename/
             # publish makes rowcount 0, and the directory move above must
@@ -432,13 +301,8 @@ class JdbcCatalog:
         """Export the table's CURRENT state and CAS the pointer — the
         explicit commit-through-the-catalog step (load_table also does
         this lazily)."""
-        ns, t = self._ident(name)
-        loc = self._pointer(ns, t)
-        if loc is None:
-            raise NoSuchTableError(name)
-        with open(_uri_to_path(loc)) as f:
-            root = _uri_to_path(json.load(f)["location"])
-        return self._publish(LakehouseTable(root), ns, t, loc)
+        ns, t, loc, _ = self._pointer_of(name)
+        return self._publish(LakehouseTable(self._table_root(loc)), ns, t, loc)
 
     # ---------------------------------------------------------- namespaces
     def _ensure_namespace_row(self, ns: str) -> None:
@@ -569,8 +433,7 @@ class JdbcCatalog:
         loc = self._view_pointer(ns, v)
         if loc is None:
             raise NoSuchViewError(name)
-        with open(_uri_to_path(loc)) as f:
-            return loc, json.load(f)
+        return loc, _read_json(loc)
 
     def view_exists(self, name: str) -> bool:
         ns, v = self._ident(name)

@@ -16,14 +16,19 @@ applies to the whole catalog, not one table:
   in ONE atomic commit — cross-table transactional publish, the thing a
   per-table catalog cannot express.
 
-Pointer publication mirrors ``jdbc_catalog``: the metadata location is a
-real Iceberg metadata.json (``iceberg_export``), re-exported
-sync-on-read whenever the live table moved past the published pointer,
-so spec-conformant readers that only follow the catalog stay current.
+The pointer protocol (sync-on-read republish, create, drop) is
+``pointer_catalog.PointerCatalog``'s; this leg supplies its primitives
+as Nessie commits. A pointer read returns the content together with the
+commit hash it was read at, and every pointer move commits against that
+hash, so the service's key-level CAS rejects it when another writer
+moved the key in between. Each ICEBERG_TABLE content carries the
+snapshot id read back from its exported metadata.json; renames are one
+atomic two-op commit.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import urllib.error
@@ -31,19 +36,14 @@ import urllib.parse
 import urllib.request
 import uuid
 
-from pyspark.sql import types as T
-
-from .catalog import NoSuchTableError, TableAlreadyExistsError
+from .catalog import TableAlreadyExistsError
+from .pointer_catalog import PointerCatalog, _read_json
 from .table import CommitConflict, LakehouseTable
 
 
-def _uri_to_path(uri: str) -> str:
-    if uri.startswith("file://"):
-        return uri[len("file://") :]
-    return uri
+class NessieCatalog(PointerCatalog):
+    kind = "nessie"
 
-
-class NessieCatalog:
     def __init__(
         self,
         uri: str,
@@ -85,12 +85,8 @@ class NessieCatalog:
         return self._req("GET", path)
 
     # ------------------------------------------------------------ identity
-    @staticmethod
-    def _key(name: str) -> str:
-        parts = name.split(".")
-        if len(parts) == 1:
-            parts = ["default", parts[0]]
-        return ".".join(parts)
+    def _key(self, name: str) -> str:
+        return ".".join(self._ident(name))
 
     def _head(self) -> str:
         return self._get(f"trees/{urllib.parse.quote(self.ref)}")[
@@ -98,13 +94,8 @@ class NessieCatalog:
         ]["hash"]
 
     def _content(self, key: str) -> dict | None:
-        try:
-            return self._get(
-                f"trees/{urllib.parse.quote(self.ref)}/contents/"
-                f"{urllib.parse.quote(key)}"
-            )["content"]
-        except KeyError:
-            return None
+        ptr = self._get_pointer(*self._ident(key))
+        return None if ptr is None else ptr[1][0]
 
     def _commit(
         self,
@@ -127,153 +118,87 @@ class NessieCatalog:
             "content": content,
         }
 
-    def _publish(self, key: str, table: LakehouseTable, content: dict | None):
-        """(Re-)export the table and commit the moved pointer."""
-        from .iceberg_export import export_iceberg_metadata
+    # ------------------------------------------------------------ pointers
+    def _get_pointer(self, ns: str, t: str, at: str | None = None):
+        """(metadataLocation, (content, hash)) read at ``at`` (default:
+        the ref's head); the hash is what the pointer's next move
+        commits against."""
+        ref = self.ref if at is None else f"{self.ref}@{at}"
+        try:
+            got = self._get(
+                f"trees/{urllib.parse.quote(ref)}/contents/"
+                f"{urllib.parse.quote(f'{ns}.{t}')}"
+            )
+        except KeyError:
+            return None
+        content = got["content"]
+        return content["metadataLocation"], (
+            content,
+            got["effectiveReference"]["hash"],
+        )
 
-        loc = export_iceberg_metadata(table)
-        # the content's snapshotId must equal the exported metadata.json's
-        # current-snapshot-id (a Nessie-aware reader cross-checks the two;
-        # the exporter remaps internal sequence numbers to Iceberg
-        # snapshot ids, so read the published value, don't recompute it)
-        with open(loc) as f:
-            exported_snap = json.load(f).get("current-snapshot-id", -1)
-        body = {
+    def _table_content(self, loc: str, content_id: str | None) -> dict:
+        """The ICEBERG_TABLE content for a pointer to ``loc``. Its
+        snapshotId must equal the exported metadata.json's
+        current-snapshot-id (a Nessie-aware reader cross-checks the two;
+        the exporter remaps internal sequence numbers to Iceberg snapshot
+        ids, so read the published value, don't recompute it)."""
+        snap = _read_json(loc).get("current-snapshot-id", -1)
+        return {
             "type": "ICEBERG_TABLE",
-            "id": (content or {}).get("id") or str(uuid.uuid4()),
-            "metadataLocation": "file://" + os.path.abspath(loc),
-            "snapshotId": int(exported_snap if exported_snap is not None else -1),
+            "id": content_id or str(uuid.uuid4()),
+            "metadataLocation": loc,
+            "snapshotId": int(snap if snap is not None else -1),
             "schemaId": 0,
             "specId": 0,
             "sortOrderId": 0,
         }
+
+    def _cas_pointer(self, ns: str, t: str, token, new: str) -> None:
+        content, expected = token
+        key = f"{ns}.{t}"
         self._commit(
-            [self._put_op(key, body)],
-            f"publish {key} -> {os.path.basename(loc)}",
+            [self._put_op(key, self._table_content(new, content.get("id")))],
+            f"publish {key} -> {os.path.basename(new)}",
+            expected,
         )
 
-    # ------------------------------------------------------------- surface
-    def table_exists(self, name: str) -> bool:
-        return self._content(self._key(name)) is not None
-
-    def load_table(self, name: str) -> LakehouseTable:
-        key = self._key(name)
-        content = self._content(key)
-        if content is None:
-            raise NoSuchTableError(name)
-        with open(_uri_to_path(content["metadataLocation"])) as f:
-            meta = json.load(f)
-        table = LakehouseTable(_uri_to_path(meta["location"]))
-        stamped = meta.get("properties", {}).get("export.source-version")
-        if stamped != str(table.current_version()):
-            try:
-                self._publish(key, table, content)
-            except CommitConflict:
-                pass  # a concurrent republish is just as fresh
-        return table
-
-    def load_table_metadata(self, name: str) -> tuple[str, dict]:
-        """(metadata-location, Iceberg metadata JSON) as published — the
-        external-engine view."""
-        self.load_table(name)  # republish if stale
-        content = self._content(self._key(name))
-        if content is None:
-            raise NoSuchTableError(name)
-        loc = content["metadataLocation"]
-        with open(_uri_to_path(loc)) as f:
-            return loc, json.load(f)
-
-    def create_table(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        if not self.warehouse:
-            raise ValueError(
-                "nessie catalog requires iceberg.catalog.warehouse to "
-                "create tables"
-            )
-        key = self._key(name)
-        if self._content(key) is not None:
+    def _insert_pointer(
+        self, name: str, ns: str, t: str, loc: str, table=None
+    ) -> None:
+        """Commit the new key against the hash its absence was read at —
+        a concurrent creator's commit conflicts it."""
+        head = self._head()
+        if self._get_pointer(ns, t, at=head) is not None:
             raise TableAlreadyExistsError(name)
-        root = os.path.join(self.warehouse, *key.split("."))
+        key = f"{ns}.{t}"
         try:
-            table = LakehouseTable.create(
-                root, schema, partition_by, properties, identifier_fields
+            self._commit(
+                [self._put_op(key, self._table_content(loc, None))],
+                f"publish {key} -> {os.path.basename(loc)}",
+                head,
             )
-        except (CommitConflict, FileExistsError):
-            raise TableAlreadyExistsError(name) from None
-        try:
-            self._publish(key, table, None)
         except CommitConflict:
             raise TableAlreadyExistsError(name) from None
-        return table
 
-    def create_table_if_not_exists(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        """The streaming pipeline's auto-create contract: idempotent
-        under races (the key-level CAS turns a lost create into
-        TableAlreadyExists, which loads the winner's table)."""
-        if self.table_exists(name):
-            return self.load_table(name)
-        try:
-            return self.create_table(
-                name, schema, partition_by, properties, identifier_fields
-            )
-        except TableAlreadyExistsError:
-            return self.load_table(name)
-
-    def register_table(self, name: str, metadata_location: str):
-        """Iceberg ``registerTable``: adopt an existing metadata tree."""
-        from .iceberg_import import import_iceberg_table
-
-        if not self.warehouse:
-            raise ValueError(
-                "nessie catalog requires iceberg.catalog.warehouse to "
-                "register tables"
-            )
-        key = self._key(name)
-        if self._content(key) is not None:
-            raise TableAlreadyExistsError(name)
-        table = import_iceberg_table(
-            metadata_location,
-            os.path.join(self.warehouse, *key.split(".")),
-        )
-        self._publish(key, table, None)
-        return table
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        key = self._key(name)
-        content = self._content(key)
-        if content is None:
-            raise NoSuchTableError(name)
+    def _delete_pointer(self, ns: str, t: str) -> None:
+        key = f"{ns}.{t}"
         self._commit(
             [{"type": "DELETE", "key": {"elements": key.split(".")}}],
             f"drop {key}",
         )
-        if purge:
-            import shutil
 
-            with open(_uri_to_path(content["metadataLocation"])) as f:
-                meta = json.load(f)
-            shutil.rmtree(_uri_to_path(meta["location"]), ignore_errors=True)
+    # ------------------------------------------------------------- surface
+    def register_table(self, name: str, metadata_location: str):
+        """Iceberg ``registerTable``: adopt an existing metadata tree."""
+        return self._register(name, metadata_location)
 
     def rename_table(self, src: str, dst: str) -> LakehouseTable:
-        skey, dkey = self._key(src), self._key(dst)
-        content = self._content(skey)
-        if content is None:
-            raise NoSuchTableError(src)
-        if self._content(dkey) is not None:
+        sns, st, _, (content, expected) = self._pointer_of(src)
+        dns, dt = self._ident(dst)
+        if self._get_pointer(dns, dt) is not None:
             raise TableAlreadyExistsError(dst)
+        skey, dkey = f"{sns}.{st}", f"{dns}.{dt}"
         # one atomic commit moves the pointer — Nessie renames are
         # transactional by construction
         self._commit(
@@ -282,6 +207,7 @@ class NessieCatalog:
                 self._put_op(dkey, content),
             ],
             f"rename {skey} -> {dkey}",
+            expected,
         )
         return self.load_table(dst)
 
@@ -317,9 +243,8 @@ class NessieCatalog:
     def on_ref(self, ref: str) -> "NessieCatalog":
         """A catalog view pinned to another reference — same service,
         same warehouse, different pointer universe."""
-        c = object.__new__(NessieCatalog)
-        c.uri, c.warehouse, c.ref = self.uri, self.warehouse, ref
-        c.token, c.timeout = self.token, self.timeout
+        c = copy.copy(self)
+        c.ref = ref
         return c
 
     def merge(self, from_ref: str, from_hash: str | None = None) -> dict:

@@ -57,8 +57,10 @@ import hmac
 import json
 import threading
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
+
+from ..background import BackgroundServer, JsonHandler
 
 NO_ANCESTOR = "11223344556677889900aabbccddeeff00112233445566778899aabbccddeeff"
 
@@ -254,21 +256,9 @@ def _split_ref(ref: str) -> tuple[str, str | None]:
     return name, (h or None)
 
 
-class _Handler(BaseHTTPRequestHandler):
+class _Handler(JsonHandler):
     store: _Store
     token: str | None = None
-
-    # silence per-request stderr logging
-    def log_message(self, *a):  # noqa: D102
-        pass
-
-    def _send(self, code: int, obj: dict) -> None:
-        body = json.dumps(obj).encode()
-        self.send_response(code)
-        self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
 
     def _err(self, code: int, msg: str) -> None:
         self._send(
@@ -287,10 +277,6 @@ class _Handler(BaseHTTPRequestHandler):
         got = self.headers.get("Authorization", "")
         # constant-time compare, same as the SigV4 stubs' signature check
         return hmac.compare_digest(got, f"Bearer {self.token}")
-
-    def _body(self) -> dict:
-        n = int(self.headers.get("Content-Length") or 0)
-        return json.loads(self.rfile.read(n) or b"{}")
 
     def _route(self, method: str) -> None:
         if not self._auth_ok():
@@ -453,7 +439,7 @@ class _Handler(BaseHTTPRequestHandler):
         self._route("DELETE")
 
 
-class NessieServer:
+class NessieServer(BackgroundServer):
     """In-process Nessie REST v2 service.
 
     >>> with NessieServer() as srv:
@@ -473,36 +459,11 @@ class NessieServer:
             (_Handler,),
             {"store": self.store, "token": token},
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
-        self._httpd.daemon_threads = True
-        self._thread: threading.Thread | None = None
+        super().__init__(ThreadingHTTPServer((host, port), handler))
 
     @property
     def uri(self) -> str:
-        h, p = self._httpd.server_address[:2]
-        return f"http://{h}:{p}/api/v2"
-
-    def start(self) -> "NessieServer":
-        self._thread = threading.Thread(
-            # poll_interval: shutdown() blocks until the serve loop's next
-            # poll tick — the 0.5s default charges every gate that stops
-            # a server ~0.25s of pure latency; 10ms polls are free
-            target=lambda: self._httpd.serve_forever(poll_interval=0.01), daemon=True
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-
-    def __enter__(self) -> "NessieServer":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
+        return super().uri + "/api/v2"
 
 
 def new_content_id() -> str:

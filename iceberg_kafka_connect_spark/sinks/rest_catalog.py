@@ -38,6 +38,7 @@ from .catalog import (
     TableAlreadyExistsError,
     UnsupportedCatalogError,
 )
+from .pointer_catalog import AutoCreate, _uri_to_path
 from .table import LakehouseTable
 
 
@@ -55,14 +56,7 @@ class RestCatalogError(Exception):
         self.etype = etype
 
 
-def _uri_to_path(uri: str) -> str:
-    for prefix in ("file://", "file:"):
-        if uri.startswith(prefix):
-            return uri[len(prefix) :]
-    return uri
-
-
-class RestCatalog:
+class RestCatalog(AutoCreate):
     """Catalog over a REST endpoint; same surface as the directory
     :class:`~.catalog.Catalog` so pipelines swap backends by config."""
 
@@ -309,26 +303,6 @@ class RestCatalog:
                 raise TableAlreadyExistsError(name) from None
             raise
         return LakehouseTable(_uri_to_path(out["metadata"]["location"]))
-
-    def create_table_if_not_exists(
-        self,
-        name: str,
-        schema: T.StructType,
-        partition_by: list[str] | str | None = None,
-        properties: dict | None = None,
-        identifier_fields: list[str] | None = None,
-    ) -> LakehouseTable:
-        """Auto-create with race tolerance — the REST analogue of
-        IcebergWriterFactory.java:69-117 (create, and on a concurrent 409,
-        load)."""
-        if self.table_exists(name):
-            return self.load_table(name)
-        try:
-            return self.create_table(
-                name, schema, partition_by, properties, identifier_fields
-            )
-        except TableAlreadyExistsError:
-            return self.load_table(name)
 
     def register_table(
         self, name: str, metadata_location: str

@@ -61,10 +61,11 @@ import os
 import re
 import threading
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 from uuid import uuid4
 
+from ..background import BackgroundServer, JsonHandler
 from .catalog import Catalog, NoSuchTableError, TableAlreadyExistsError
 from .iceberg_export import (
     STAGED_REF_PREFIX,
@@ -238,7 +239,7 @@ def _ns_name(levels: list[str]) -> str:
     return ".".join(levels)
 
 
-class _Handler(BaseHTTPRequestHandler):
+class _Handler(JsonHandler):
     # the server instance stuffs these in via type() subclassing
     state: _State = None  # type: ignore[assignment]
     token: str | None = None
@@ -247,29 +248,12 @@ class _Handler(BaseHTTPRequestHandler):
 
     protocol_version = "HTTP/1.1"
 
-    def log_message(self, *a):  # quiet
-        pass
-
     # ------------------------------------------------------------- plumbing
     def _json_body(self) -> dict:
-        n = int(self.headers.get("Content-Length") or 0)
-        if n == 0:
-            return {}
         try:
-            return json.loads(self.rfile.read(n))
+            return self._body()
         except json.JSONDecodeError as e:
             raise _err(400, "BadRequestException", f"invalid JSON body: {e}")
-
-    def _send(self, code: int, payload: dict | None = None) -> None:
-        body = b"" if payload is None else json.dumps(payload).encode()
-        if self.command == "HEAD":  # advertised length must match the wire
-            body = b""
-        self.send_response(code)
-        self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        if body:
-            self.wfile.write(body)
 
     def _send_error_obj(self, e: RestError) -> None:
         self._send(
@@ -1845,7 +1829,7 @@ class _Handler(BaseHTTPRequestHandler):
     do_GET = do_POST = do_DELETE = do_HEAD = _handle
 
 
-class IcebergRestServer:
+class IcebergRestServer(BackgroundServer):
     """In-process Iceberg REST catalog service over a directory warehouse.
 
     >>> srv = IcebergRestServer("/path/warehouse").start()
@@ -1879,40 +1863,9 @@ class IcebergRestServer:
                 "token_ttl_s": token_ttl_s,
             },
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
-        self._httpd.daemon_threads = True
-        self._thread: threading.Thread | None = None
-
-    @property
-    def uri(self) -> str:
-        h, p = self._httpd.server_address[:2]
-        return f"http://{h}:{p}"
+        super().__init__(ThreadingHTTPServer((host, port), handler))
 
     @property
     def catalog(self) -> Catalog:
         """The directory catalog the server fronts (server-side handle)."""
         return self._state.catalog
-
-    def start(self) -> "IcebergRestServer":
-        # poll_interval: shutdown() blocks until the serve loop's next
-        # poll tick — the 0.5s default charges every gate that stops
-        # a server ~0.25s of pure latency; 10ms polls are free
-        t = threading.Thread(
-            target=lambda: self._httpd.serve_forever(poll_interval=0.01),
-            daemon=True,
-        )
-        t.start()
-        self._thread = t
-        return self
-
-    def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-        if self._thread:
-            self._thread.join(timeout=5)
-
-    def __enter__(self) -> "IcebergRestServer":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()

@@ -32,12 +32,14 @@ data files to bound read amplification, exactly like Iceberg maintenance.
 
 from __future__ import annotations
 
+import contextlib
 import glob as globmod
 import json
 import logging
 import os
 import re
 import shutil
+import threading
 import time
 import uuid
 
@@ -53,7 +55,10 @@ from .stats import collect_parquet_stats, file_may_match, split_conjuncts
 COMMIT_RETRIES = 3  # IcebergSinkConfig.java:103-104 (schema/create retries)
 MAIN = "main"
 
-import contextlib
+_CACHE_FLAG = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+_CACHE_FLAG_LOCK = threading.Lock()
+# session → [open commit_sized_caches contexts, flag value before the first]
+_cache_flag_holds: dict = {}
 
 
 @contextlib.contextmanager
@@ -73,20 +78,30 @@ def commit_sized_caches(spark: SparkSession):
     call rather than the session: analytics operators persist big shuffled
     intermediates whose fixed width keeps the compute wide (measured: a
     session-wide flag cost docs_span_dedup 1.23x, dedup_incremental
-    1.12x), so only commit-path caches opt in."""
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "true")
+    1.12x), so only commit-path caches opt in.
+
+    Thread-safe and reentrant per session: commits running concurrently
+    on one session (``commit_threads>1``) share one hold — the first to
+    enter sets the flag, the last to leave restores the value it found
+    (an unset conf goes back to unset)."""
+    with _CACHE_FLAG_LOCK:
+        hold = _cache_flag_holds.get(spark)
+        if hold is None:
+            hold = [0, spark.conf.get(_CACHE_FLAG, None)]
+            _cache_flag_holds[spark] = hold
+            spark.conf.set(_CACHE_FLAG, "true")
+        hold[0] += 1
     try:
         yield
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        with _CACHE_FLAG_LOCK:
+            hold[0] -= 1
+            if hold[0] == 0:
+                del _cache_flag_holds[spark]
+                if hold[1] is None:
+                    spark.conf.unset(_CACHE_FLAG)
+                else:
+                    spark.conf.set(_CACHE_FLAG, hold[1])
 
 
 def _register_codecs_by_value() -> None:

@@ -35,8 +35,10 @@ import hmac
 import json
 import threading
 import urllib.request
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 from urllib.parse import urlparse
+
+from ..background import BackgroundServer, JsonHandler
 
 
 def canonical_schema(schema: str | dict) -> str:
@@ -91,22 +93,10 @@ class _Store:
         self.subject_compat: dict[str, str] = {}
 
 
-class _Handler(BaseHTTPRequestHandler):
+class _Handler(JsonHandler):
     store: _Store
     token: str | None
-
-    def log_message(self, *a):  # noqa: D102
-        pass
-
-    def _send(self, code: int, obj) -> None:
-        body = json.dumps(obj).encode()
-        self.send_response(code)
-        self.send_header(
-            "Content-Type", "application/vnd.schemaregistry.v1+json"
-        )
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
+    content_type = "application/vnd.schemaregistry.v1+json"
 
     def _err(self, code: int, error_code: int, msg: str) -> None:
         self._send(code, {"error_code": error_code, "message": msg})
@@ -116,10 +106,6 @@ class _Handler(BaseHTTPRequestHandler):
             return True
         got = self.headers.get("Authorization", "")
         return hmac.compare_digest(got, f"Bearer {self.token}")
-
-    def _body(self) -> dict:
-        n = int(self.headers.get("Content-Length") or 0)
-        return json.loads(self.rfile.read(n) or b"{}")
 
     def _version_entry(
         self, subject: str, version: str
@@ -285,8 +271,9 @@ class _Handler(BaseHTTPRequestHandler):
         self._route("PUT")
 
 
-class SchemaRegistryServer:
-    """In-process Confluent-protocol registry for tests and gates."""
+class SchemaRegistryServer(BackgroundServer):
+    """In-process Confluent-protocol registry for tests and gates; serves
+    from construction."""
 
     def __init__(
         self, host: str = "127.0.0.1", port: int = 0, token: str | None = None
@@ -295,30 +282,9 @@ class SchemaRegistryServer:
         handler = type(
             "_Bound", (_Handler,), {"store": store, "token": token}
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
+        super().__init__(ThreadingHTTPServer((host, port), handler))
         self.store = store
-        self._thread = threading.Thread(
-            # poll_interval: shutdown() blocks until the serve loop's next
-            # poll tick — the 0.5s default charges every gate that stops
-            # a server ~0.25s of pure latency; 10ms polls are free
-            target=lambda: self._httpd.serve_forever(poll_interval=0.01), daemon=True
-        )
-        self._thread.start()
-
-    @property
-    def uri(self) -> str:
-        h, p = self._httpd.server_address[:2]
-        return f"http://{h}:{p}"
-
-    def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-
-    def __enter__(self) -> "SchemaRegistryServer":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+        self.start()
 
 
 class SchemaRegistryClient:

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import DELETE, INSERT
-from ..sinks.table import MAIN
+from ..sinks.table import MAIN, commit_sized_caches
 
 _MARKER = "changelog.src-snapshot-id"
 
@@ -202,8 +202,6 @@ class ChangelogStream:
             # evolve the sink schema with _row_id columns and break a
             # later read_with_lineage on a v3 destination (duplicate
             # field against LINEAGE_FIELDS)
-            from ..sinks.table import commit_sized_caches
-
             with commit_sized_caches(spark):
                 net = (
                     ch.drop(
@@ -438,8 +436,6 @@ def reconcile(
     missing = src_state.exceptAll(dst_state).withColumn(
         "__op", F.lit(INSERT)
     )
-    from ..sinks.table import commit_sized_caches
-
     with commit_sized_caches(spark):
         delta = stale.unionByName(missing).persist()
         try:

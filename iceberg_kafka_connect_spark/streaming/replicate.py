@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.cdc import DELETE, UPDATE
+from ..sinks.table import commit_sized_caches
 
 _MARKER = "mirror.src-snapshot-id"
 
@@ -49,8 +50,6 @@ def mirror_changes(
     last = dst.last_summary_value(_MARKER)
     if last == head:
         return None
-    from ..sinks.table import commit_sized_caches
-
     ch = src.changes_between(spark, last, head, branch=branch)
     # net effect per key: the change with the highest (ordinal, insert>delete)
     # wins — an upsert snapshot emits delete+insert at one ordinal and the

@@ -14,17 +14,19 @@ from iceberg_kafka_connect_spark.sinks.catalog import (
 
 
 def test_hadoop_catalog_builds_from_reference_props(tmp_path):
-    props = {
-        "iceberg.catalog": "demo",
-        "iceberg.catalog.type": "hadoop",
-        "iceberg.catalog.warehouse": f"file://{tmp_path}/wh",
-    }
-    spec = CatalogSpec.from_properties(props)
-    assert spec.name == "demo"
-    assert spec.type == "hadoop"
-    cat = spec.build()
-    assert isinstance(cat, Catalog)
-    assert cat.warehouse == f"{tmp_path}/wh"
+    # file:///wh (tmp_path is absolute) and Iceberg-Java's file:/wh
+    for scheme in ("file://", "file:"):
+        props = {
+            "iceberg.catalog": "demo",
+            "iceberg.catalog.type": "hadoop",
+            "iceberg.catalog.warehouse": f"{scheme}{tmp_path}/wh",
+        }
+        spec = CatalogSpec.from_properties(props)
+        assert spec.name == "demo"
+        assert spec.type == "hadoop"
+        cat = spec.build()
+        assert isinstance(cat, Catalog)
+        assert cat.warehouse == f"{tmp_path}/wh"
 
 
 def test_default_catalog_name_is_iceberg(tmp_path):
