@@ -28,19 +28,19 @@ same way — only the endpoint differs.
 
 from __future__ import annotations
 
-import json
 import time
-import urllib.error
-import urllib.request
 import uuid
-from urllib.parse import urlparse
 
 from .catalog import TableAlreadyExistsError
-from .dynamodb_server import sign_aws_request
+from .dynamodb_server import aws_json_call
 from .pointer_catalog import PointerCatalog
 from .table import CommitConflict, LakehouseTable
 
 _NAMESPACE_MARK = "NAMESPACE"
+_ERRORS = {
+    "ConditionalCheckFailedException": CommitConflict,
+    "ResourceInUseException": TableAlreadyExistsError,
+}
 
 
 class DynamoDbCatalog(PointerCatalog):
@@ -67,45 +67,10 @@ class DynamoDbCatalog(PointerCatalog):
 
     # ----------------------------------------------------------- protocol
     def _call(self, op: str, body: dict) -> dict:
-        payload = json.dumps(body).encode()
-        u = urlparse(self.uri)
-        headers = {
-            "Content-Type": "application/x-amz-json-1.0",
-            "X-Amz-Target": f"DynamoDB_20120810.{op}",
-            "Host": u.netloc,
-        }
-        if self.access_key and self.secret_key:
-            headers.update(
-                sign_aws_request(
-                    u.netloc,
-                    u.path,
-                    headers["X-Amz-Target"],
-                    headers["Content-Type"],
-                    payload,
-                    self.access_key,
-                    self.secret_key,
-                    self.region,
-                    "dynamodb",
-                )
-            )
-        req = urllib.request.Request(
-            self.uri, data=payload, method="POST", headers=headers
+        return aws_json_call(
+            self, "DynamoDB_20120810", op, body,
+            "application/x-amz-json-1.0", "dynamodb", _ERRORS,
         )
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                return json.loads(resp.read() or b"{}")
-        except urllib.error.HTTPError as e:
-            err = json.loads(e.read() or b"{}")
-            etype = (err.get("__type") or "").rpartition("#")[2]
-            if etype == "ConditionalCheckFailedException":
-                raise CommitConflict(err.get("message", etype)) from None
-            if etype == "ResourceInUseException":
-                raise TableAlreadyExistsError(
-                    err.get("message", etype)
-                ) from None
-            raise RuntimeError(
-                f"dynamodb {op}: {e.code} {err.get('message', err)}"
-            ) from None
 
     def _ensure_catalog_table(self) -> None:
         try:

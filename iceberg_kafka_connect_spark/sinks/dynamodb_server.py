@@ -33,6 +33,8 @@ import hashlib
 import hmac
 import json
 import threading
+import urllib.error
+import urllib.request
 from http.server import ThreadingHTTPServer
 from urllib.parse import urlparse
 
@@ -139,6 +141,59 @@ def sign_aws_request(
             f"SignedHeaders={';'.join(signed)}, Signature={sig}"
         ),
     }
+
+
+def aws_json_call(
+    client,
+    target_prefix: str,
+    op: str,
+    body: dict,
+    content_type: str,
+    service: str,
+    errors: dict[str, type[Exception]],
+) -> dict:
+    """One AWS JSON-protocol request, the transport of the DynamoDB and
+    Glue catalogs: POST ``body`` to ``client.uri`` with ``X-Amz-Target:
+    <target_prefix>.<op>``, SigV4-signed for ``service`` when ``client``
+    carries ``access_key`` and ``secret_key``. An error reply's
+    ``__type`` picks the exception class from ``errors``; any other
+    error raises RuntimeError. ``client`` also supplies ``region`` and
+    ``timeout``."""
+    payload = json.dumps(body).encode()
+    u = urlparse(client.uri)
+    headers = {
+        "Content-Type": content_type,
+        "X-Amz-Target": f"{target_prefix}.{op}",
+        "Host": u.netloc,
+    }
+    if client.access_key and client.secret_key:
+        headers.update(
+            sign_aws_request(
+                u.netloc,
+                u.path,
+                headers["X-Amz-Target"],
+                headers["Content-Type"],
+                payload,
+                client.access_key,
+                client.secret_key,
+                client.region,
+                service,
+            )
+        )
+    req = urllib.request.Request(
+        client.uri, data=payload, method="POST", headers=headers
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=client.timeout) as resp:
+            return json.loads(resp.read() or b"{}")
+    except urllib.error.HTTPError as e:
+        err = json.loads(e.read() or b"{}")
+        etype = (err.get("__type") or "").rpartition("#")[2]
+        if etype in errors:
+            raise errors[etype](err.get("message", etype)) from None
+        raise RuntimeError(
+            f"{service} {op}: {e.code} {err.get('message', err)}"
+        ) from None
 
 
 # ---------------------------------------------------------------- store

@@ -23,15 +23,16 @@ it VERIFIES each request's SigV4 signature.
 
 from __future__ import annotations
 
-import json
-import urllib.error
-import urllib.request
-from urllib.parse import urlparse
-
 from .catalog import NoSuchTableError, TableAlreadyExistsError
-from .dynamodb_server import sign_aws_request
+from .dynamodb_server import aws_json_call
 from .pointer_catalog import PointerCatalog
 from .table import CommitConflict, LakehouseTable
+
+_ERRORS = {
+    "ConcurrentModificationException": CommitConflict,
+    "AlreadyExistsException": TableAlreadyExistsError,
+    "EntityNotFoundException": NoSuchTableError,
+}
 
 
 class GlueCatalog(PointerCatalog):
@@ -55,47 +56,10 @@ class GlueCatalog(PointerCatalog):
 
     # ----------------------------------------------------------- protocol
     def _call(self, op: str, body: dict) -> dict:
-        payload = json.dumps(body).encode()
-        u = urlparse(self.uri)
-        headers = {
-            "Content-Type": "application/x-amz-json-1.1",
-            "X-Amz-Target": f"AWSGlue.{op}",
-            "Host": u.netloc,
-        }
-        if self.access_key and self.secret_key:
-            headers.update(
-                sign_aws_request(
-                    u.netloc,
-                    u.path,
-                    headers["X-Amz-Target"],
-                    headers["Content-Type"],
-                    payload,
-                    self.access_key,
-                    self.secret_key,
-                    self.region,
-                    "glue",
-                )
-            )
-        req = urllib.request.Request(
-            self.uri, data=payload, method="POST", headers=headers
+        return aws_json_call(
+            self, "AWSGlue", op, body,
+            "application/x-amz-json-1.1", "glue", _ERRORS,
         )
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                return json.loads(resp.read() or b"{}")
-        except urllib.error.HTTPError as e:
-            err = json.loads(e.read() or b"{}")
-            etype = (err.get("__type") or "").rpartition("#")[2]
-            if etype == "ConcurrentModificationException":
-                raise CommitConflict(err.get("message", etype)) from None
-            if etype == "AlreadyExistsException":
-                raise TableAlreadyExistsError(
-                    err.get("message", etype)
-                ) from None
-            if etype == "EntityNotFoundException":
-                raise NoSuchTableError(err.get("message", etype)) from None
-            raise RuntimeError(
-                f"glue {op}: {e.code} {err.get('message', err)}"
-            ) from None
 
     # ------------------------------------------------------------ pointers
     def _ensure_database(self, db: str) -> None:

@@ -601,6 +601,37 @@ def _translate_snapshot(
 
 
 # ------------------------------------------------------------------ import
+def _put_metadata(table: LakehouseTable, fields: dict) -> None:
+    """Set top-level metadata fields in one retried metadata commit."""
+
+    def mutate(meta: dict) -> tuple[None, bool]:
+        meta.update(fields)
+        return None, True
+
+    table._update_metadata(mutate)
+
+
+def cover_entry_sequences(
+    table: LakehouseTable, snap: dict, entries: list[dict]
+) -> dict:
+    """Raise a just-committed snapshot's sequence number to the highest
+    sequence number its imported ``entries`` carry, and return the
+    snapshot as committed. Later equality deletes are assigned
+    parent_seq + 1 and only suppress data with a STRICTLY LOWER seq, so a
+    commit left below its entries would orphan imported multi-sequence
+    history."""
+    max_seq = max((e["seq"] for e in entries), default=1)
+    if max_seq <= snap["sequence_number"]:
+        return snap
+
+    def mutate(meta: dict) -> tuple[dict, bool]:
+        raised = table._snapshot_by_id(meta, snap["snapshot_id"])
+        raised["sequence_number"] = max_seq
+        return raised, True
+
+    return table._update_metadata(mutate)
+
+
 def import_iceberg_table(
     source: str,
     dest_root: str,
@@ -759,9 +790,7 @@ def import_iceberg_table(
     if fv >= 3 and meta.get("next-row-id") is not None:
         # continue claiming row-id ranges where the source left off —
         # fresh appends after the import must never reuse imported ids
-        meta2 = table.metadata()
-        meta2["next-row-id"] = int(meta["next-row-id"])
-        table._write_version(meta2["version"] + 1, meta2)
+        _put_metadata(table, {"next-row-id": int(meta["next-row-id"])})
 
     # ----- translate one external snapshot's entries into the internal
     # file-entry shape (shared by main and every other imported ref, and
@@ -792,21 +821,9 @@ def import_iceberg_table(
             "append", data_files, delete_files, summary, branch,
             preserve_seq=True,
         )
-        # the commit's own sequence number must sit at (or above) the
-        # highest imported entry seq: later equality deletes are assigned
-        # parent_seq + 1 and only suppress data with a STRICTLY LOWER seq,
-        # so leaving it at 1 would orphan imported multi-sequence history
-        max_seq = max(
-            (e["seq"] for e in data_files + delete_files), default=1
+        return cover_entry_sequences(
+            table, snap_int, data_files + delete_files
         )
-        if max_seq > snap_int["sequence_number"]:
-            meta2 = table.metadata()
-            for s in meta2["snapshots"]:
-                if s["snapshot_id"] == snap_int["snapshot_id"]:
-                    s["sequence_number"] = max_seq
-                    snap_int = s
-            table._write_version(meta2["version"] + 1, meta2)
-        return snap_int
 
     imported: dict[int, dict] = {snapshot_id: _commit_ref(snapshot_id, MAIN)}
 
@@ -828,18 +845,14 @@ def import_iceberg_table(
             if ext_sid in imported:
                 # ref shares a snapshot already imported on another branch
                 # — point this branch ref at the internal snapshot directly
-                meta2 = table.metadata()
-                meta2["refs"][rname] = imported[ext_sid]["snapshot_id"]
-                table._write_version(meta2["version"] + 1, meta2)
+                table.set_branch(rname, imported[ext_sid]["snapshot_id"])
             else:
                 imported[ext_sid] = _commit_ref(ext_sid, rname)
         else:  # tag
             if ext_sid not in imported:
                 scratch = f"__import__{rname}"
                 imported[ext_sid] = _commit_ref(ext_sid, scratch)
-                meta2 = table.metadata()
-                meta2["refs"].pop(scratch, None)
-                table._write_version(meta2["version"] + 1, meta2)
+                table.drop_branch(scratch)
             table.create_tag(
                 rname, snapshot_id=imported[ext_sid]["snapshot_id"]
             )
@@ -866,16 +879,12 @@ def import_iceberg_table(
     }
     retention = {r: v for r, v in retention.items() if v}
     if retention:
-        meta2 = table.metadata()
-        meta2["ref_retention"] = retention
-        table._write_version(meta2["version"] + 1, meta2)
+        _put_metadata(table, {"ref_retention": retention})
 
     if skipped_refs:
-        meta2 = table.metadata()
-        meta2["properties"]["import.skipped-refs"] = ",".join(
-            sorted(skipped_refs)
+        table.set_properties(
+            {"import.skipped-refs": ",".join(sorted(skipped_refs))}
         )
-        table._write_version(meta2["version"] + 1, meta2)
 
     # ----- table statistics: carry Puffin NDV entries for imported
     # snapshots through (referenced in place; snapshot ids remapped to
@@ -920,9 +929,7 @@ def import_iceberg_table(
                 }
             )
     if stats_in:
-        meta2 = table.metadata()
-        meta2["statistics"] = stats_in
-        table._write_version(meta2["version"] + 1, meta2)
+        _put_metadata(table, {"statistics": stats_in})
 
     # ----- partition statistics: carry entries for imported snapshots
     # through, referencing the external stats files in place (the reader
@@ -946,9 +953,7 @@ def import_iceberg_table(
             }
         )
     if pstats_in:
-        meta2 = table.metadata()
-        meta2["partition-statistics"] = pstats_in
-        table._write_version(meta2["version"] + 1, meta2)
+        _put_metadata(table, {"partition-statistics": pstats_in})
     return table
 
 
@@ -1160,15 +1165,7 @@ def refresh_from_iceberg(
                 "append", added_data, added_del, summary, MAIN,
                 preserve_seq=True,
             )
-        max_seq = max(
-            (e["seq"] for e in cur_data + cur_del), default=1
-        )
-        if max_seq > snap_int["sequence_number"]:
-            meta2 = table.metadata()
-            for s in meta2["snapshots"]:
-                if s["snapshot_id"] == snap_int["snapshot_id"]:
-                    s["sequence_number"] = max_seq
-            table._write_version(meta2["version"] + 1, meta2)
+        cover_entry_sequences(table, snap_int, cur_data + cur_del)
         prev_data, prev_del = cur_data, cur_del
         synced += 1
 
@@ -1277,5 +1274,4 @@ def translate_rest_snapshot(
         # self-contained replace snapshots
         "full_data": cur_data,
         "full_deletes": cur_del,
-        "max_seq": max((e["seq"] for e in cur_data + cur_del), default=1),
     }

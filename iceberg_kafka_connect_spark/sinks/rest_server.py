@@ -1306,6 +1306,8 @@ class _Handler(JsonHandler):
         """Apply half of add-snapshot: ONE native atomic commit. The
         summary records the writer's assigned id so the exporter serves
         the snapshot back under exactly that id (rest.assigned-id)."""
+        from .iceberg_import import cover_entry_sequences
+
         prep = ctx["staged"][sid]
         summary = {
             "operation": prep["operation"],
@@ -1358,12 +1360,9 @@ class _Handler(JsonHandler):
         # mirror refresh_from_iceberg: entries may carry external sequence
         # numbers beyond the native counter — the snapshot's own sequence
         # number must cover them so later deletes order correctly
-        if prep["max_seq"] > snap_int["sequence_number"]:
-            meta2 = table.metadata()
-            for s in meta2["snapshots"]:
-                if s["snapshot_id"] == snap_int["snapshot_id"]:
-                    s["sequence_number"] = prep["max_seq"]
-            table._write_version(meta2["version"] + 1, meta2)
+        cover_entry_sequences(
+            table, snap_int, prep["full_data"] + prep["full_deletes"]
+        )
         if rtype == "tag" and ref is not None:
             try:
                 table.create_tag(ref, snap_int["snapshot_id"])

@@ -53,6 +53,7 @@ from .spec import PartitionField, parse_partition_spec, partition_dir_value
 from .stats import collect_parquet_stats, file_may_match, split_conjuncts
 
 COMMIT_RETRIES = 3  # IcebergSinkConfig.java:103-104 (schema/create retries)
+COMMIT_BACKOFF_S = 0.05  # the n-th lost CAS backs off n × this
 MAIN = "main"
 
 _CACHE_FLAG = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -345,6 +346,42 @@ class LakehouseTable:
         finally:
             os.unlink(tmp)
 
+    def _update_metadata(self, mutate, written: list[str] | None = None):
+        """The optimistic metadata commit every table change goes through
+        (Iceberg's retrying ``commit()``: Coordinator.java:217-257 for
+        snapshots, SchemaUtils.java:85-132 for schema updates).
+
+        Each attempt loads the head once and calls ``mutate(meta)``, which
+        edits ``meta`` in place and returns ``(result, changed)``. An
+        unchanged attempt writes nothing; otherwise ``meta`` is linked as
+        the next version and ``result`` returned. ``written`` lists the
+        absolute paths of files the new version references: entries a
+        ``mutate`` call appends are removed when its attempt loses the
+        CAS, and entries present before the call (files written once, up
+        front) are removed when the last attempt loses. After
+        ``COMMIT_RETRIES`` lost attempts the ``CommitConflict`` is
+        raised; a ``CommitConflict`` raised by ``mutate`` itself (a
+        failed validation) is not retried."""
+        written = [] if written is None else written
+        upfront = len(written)
+        for attempt in range(COMMIT_RETRIES):
+            meta = self.metadata()
+            result, changed = mutate(meta)
+            if not changed:
+                return result
+            try:
+                self._write_version(meta["version"] + 1, meta)
+                return result
+            except CommitConflict:
+                last = attempt == COMMIT_RETRIES - 1
+                first = 0 if last else upfront
+                for path in written[first:]:
+                    os.unlink(path)
+                del written[first:]
+                if last:
+                    raise
+                time.sleep(COMMIT_BACKOFF_S * (attempt + 1))
+
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.metadata()["schema"])
 
@@ -421,6 +458,14 @@ class LakehouseTable:
             return None
         return next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
 
+    def _is_ancestor(self, meta: dict, ancestor: str, sid: str) -> bool:
+        """True when ``ancestor`` is ``sid`` or on its parent chain."""
+        while sid is not None:
+            if sid == ancestor:
+                return True
+            sid = self._snapshot_by_id(meta, sid)["parent"]
+        return False
+
     def _snapshot_by_id(self, meta: dict, sid: str) -> dict:
         for s in meta["snapshots"]:
             if s["snapshot_id"] == sid:
@@ -466,8 +511,9 @@ class LakehouseTable:
         the driver rewrites per commit is therefore O(snapshots), and each
         commit writes O(files-added) — Iceberg's manifest-list shape, not
         O(snapshots × files)."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+        written: list[str] = []
+
+        def mutate(meta: dict) -> tuple[dict, bool]:
             parent_id = meta["refs"].get(branch)
             # expected_parent: REPLACE commits rewrite the full live set as
             # computed from a specific head — if the branch moved since (a
@@ -479,81 +525,99 @@ class LakehouseTable:
                     f"branch {branch!r} moved from {expected_parent!r} to "
                     f"{parent_id!r} during rewrite; re-plan the rewrite"
                 )
-            parent = (
-                self._snapshot_by_id(meta, parent_id) if parent_id else None
+            snap = self._stage_snapshot(
+                meta, written, operation, data_files, delete_files, summary,
+                branch, replace, new_schema, preserve_seq,
             )
-            seq = (parent["sequence_number"] + 1) if parent else 1
-            sid = uuid.uuid4().hex
-            manifest_rel = os.path.join("metadata", f"man-{sid}.json")
-            with open(os.path.join(self.root, manifest_rel), "w") as f:
-                # preserve_seq: partial rewrites (binpack) carry files over
-                # from earlier snapshots — their original sequence numbers
-                # must survive so existing equality deletes keep applying
-                def _seq(entry: dict) -> int:
-                    if preserve_seq and "seq" in entry:
-                        return entry["seq"]
-                    return seq
+            return snap, True
 
-                # v3 row lineage (format-version >= 3 only): every added
-                # data file claims a first_row_id range
-                # [next-row-id, next-row-id + rows); carried-over files
-                # (preserve_seq rewrites) keep theirs. Files without a
-                # recorded row count (avro) get None — their rows read
-                # _row_id NULL, the spec's "unknown" (next-row-id only
-                # ever grows, even across deletes). v2 tables skip
-                # claiming entirely — lineage is a v3 feature and the
-                # counter would be dead metadata.
-                lineage = _lineage_on(meta.get("properties") or {})
-                next_row_id = meta.get("next-row-id", 0)
-                stamped_data = []
-                for df_ in data_files:
-                    e = {**df_, "seq": _seq(df_)}
-                    if lineage and not (
-                        preserve_seq and "first_row_id" in df_
-                    ):
-                        nrows = (df_.get("stats") or {}).get("rows")
-                        if nrows is None:
-                            e["first_row_id"] = None
-                        else:
-                            e["first_row_id"] = next_row_id
-                            next_row_id += int(nrows)
-                    stamped_data.append(e)
-                if lineage:
-                    meta["next-row-id"] = next_row_id
+        snap = self._update_metadata(mutate, written)
+        self._maybe_merge_manifests(operation, branch)
+        return snap
 
-                json.dump(
-                    {
-                        "added_data_files": stamped_data,
-                        "added_delete_files": [
-                            {**df_, "seq": _seq(df_)} for df_ in delete_files
-                        ],
-                    },
-                    f,
-                )
-            snap = {
-                "snapshot_id": sid,
-                "parent": parent_id,
-                "sequence_number": seq,
-                "timestamp_ms": int(time.time() * 1000),
-                "operation": operation,
-                "manifest": manifest_rel,
-                "replace": replace or parent is None,
-                "summary": {**summary, "commit-uuid": uuid.uuid4().hex},
-            }
-            meta["snapshots"].append(snap)
-            meta["refs"][branch] = snap["snapshot_id"]
-            if new_schema is not None:
-                meta["schema"] = new_schema
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                self._maybe_merge_manifests(operation, branch)
-                return snap
-            except CommitConflict:
-                os.unlink(os.path.join(self.root, manifest_rel))
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        raise CommitConflict("unreachable")
+    def _stage_snapshot(
+        self,
+        meta: dict,
+        written: list[str],
+        operation: str,
+        data_files: list[dict],
+        delete_files: list[dict],
+        summary: dict,
+        branch: str,
+        replace: bool = False,
+        new_schema: dict | None = None,
+        preserve_seq: bool = False,
+    ) -> dict:
+        """Write the manifest of a new snapshot on ``branch`` (its path
+        goes to ``written``) and add the snapshot to ``meta``; the caller
+        commits ``meta`` through ``_update_metadata``."""
+        parent_id = meta["refs"].get(branch)
+        parent = self._snapshot_by_id(meta, parent_id) if parent_id else None
+        seq = (parent["sequence_number"] + 1) if parent else 1
+        sid = uuid.uuid4().hex
+        manifest_rel = os.path.join("metadata", f"man-{sid}.json")
+        manifest_path = os.path.join(self.root, manifest_rel)
+        written.append(manifest_path)
+        with open(manifest_path, "w") as f:
+            # preserve_seq: partial rewrites (binpack) carry files over
+            # from earlier snapshots — their original sequence numbers
+            # must survive so existing equality deletes keep applying
+            def _seq(entry: dict) -> int:
+                if preserve_seq and "seq" in entry:
+                    return entry["seq"]
+                return seq
+
+            # v3 row lineage (format-version >= 3 only): every added
+            # data file claims a first_row_id range
+            # [next-row-id, next-row-id + rows); carried-over files
+            # (preserve_seq rewrites) keep theirs. Files without a
+            # recorded row count (avro) get None — their rows read
+            # _row_id NULL, the spec's "unknown" (next-row-id only
+            # ever grows, even across deletes). v2 tables skip
+            # claiming entirely — lineage is a v3 feature and the
+            # counter would be dead metadata.
+            lineage = _lineage_on(meta.get("properties") or {})
+            next_row_id = meta.get("next-row-id", 0)
+            stamped_data = []
+            for df_ in data_files:
+                e = {**df_, "seq": _seq(df_)}
+                if lineage and not (
+                    preserve_seq and "first_row_id" in df_
+                ):
+                    nrows = (df_.get("stats") or {}).get("rows")
+                    if nrows is None:
+                        e["first_row_id"] = None
+                    else:
+                        e["first_row_id"] = next_row_id
+                        next_row_id += int(nrows)
+                stamped_data.append(e)
+            if lineage:
+                meta["next-row-id"] = next_row_id
+
+            json.dump(
+                {
+                    "added_data_files": stamped_data,
+                    "added_delete_files": [
+                        {**df_, "seq": _seq(df_)} for df_ in delete_files
+                    ],
+                },
+                f,
+            )
+        snap = {
+            "snapshot_id": sid,
+            "parent": parent_id,
+            "sequence_number": seq,
+            "timestamp_ms": int(time.time() * 1000),
+            "operation": operation,
+            "manifest": manifest_rel,
+            "replace": replace or parent is None,
+            "summary": {**summary, "commit-uuid": uuid.uuid4().hex},
+        }
+        meta["snapshots"].append(snap)
+        meta["refs"][branch] = snap["snapshot_id"]
+        if new_schema is not None:
+            meta["schema"] = new_schema
+        return snap
 
     def _maybe_merge_manifests(self, operation: str, branch: str) -> None:
         """Iceberg's automatic manifest merging on commit
@@ -1506,21 +1570,15 @@ class LakehouseTable:
         RecordConverter.java:166-229), widen int→long / float→double.
         Optimistic retry like SchemaUtils.java:85-132. Returns True if the
         table schema changed."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[bool, bool]:
             current = T.StructType.fromJson(meta["schema"])
             evolved, changed = _evolve_struct(current, incoming)
-            if not changed:
-                return False
-            meta["schema"] = json.loads(evolved.json())
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return True
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return False
+            if changed:
+                meta["schema"] = json.loads(evolved.json())
+            return changed, changed
+
+        return self._update_metadata(mutate)
 
     def add_column(
         self,
@@ -1546,8 +1604,8 @@ class LakehouseTable:
             md["write-default"] = write_default
         if doc:
             md["doc"] = doc
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             current = T.StructType.fromJson(meta["schema"])
             if name in {f.name for f in current.fields}:
                 raise ValueError(f"column {name!r} already exists")
@@ -1555,13 +1613,9 @@ class LakehouseTable:
                 list(current.fields) + [T.StructField(name, dtype, True, md)]
             )
             meta["schema"] = json.loads(evolved.json())
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def _apply_write_defaults(self, df: DataFrame) -> DataFrame:
         """Fill columns an append omitted entirely with their
@@ -1845,26 +1899,28 @@ class LakehouseTable:
         )
         with open(os.path.join(self.root, rel), "w") as f:
             json.dump(doc, f)
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
-            stats = [
+        self._register_stats_file(
+            "statistics",
+            {"snapshot-id": snap["snapshot_id"], "statistics-path": rel},
+        )
+        return doc
+
+    def _register_stats_file(self, key: str, entry: dict) -> None:
+        """Commit ``entry`` for an already-written statistics file into
+        the ``key`` registry (``statistics`` or ``partition-statistics``),
+        replacing the entry of the same snapshot. The file is removed
+        when the commit never lands."""
+
+        def mutate(meta: dict) -> tuple[None, bool]:
+            meta[key] = [
                 s
-                for s in meta.get("statistics", [])
-                if s["snapshot-id"] != snap["snapshot_id"]
-            ]
-            stats.append(
-                {"snapshot-id": snap["snapshot_id"], "statistics-path": rel}
-            )
-            meta["statistics"] = stats
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return doc
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    os.unlink(os.path.join(self.root, rel))
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        raise CommitConflict("unreachable")
+                for s in meta.get(key, [])
+                if s["snapshot-id"] != entry["snapshot-id"]
+            ] + [entry]
+            return None, True
+
+        path = os.path.join(self.root, entry["statistics-path"])
+        self._update_metadata(mutate, [path])
 
     def column_stats(self, branch: str = MAIN) -> dict | None:
         """The analyze() stats doc for the branch head's snapshot — walks
@@ -1946,8 +2002,8 @@ class LakehouseTable:
         from .spec import parse_partition_spec
 
         new_spec = parse_partition_spec(partition_by)
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             names = {f["name"] for f in meta["schema"]["fields"]}
             for pf in new_spec:
                 if pf.source not in names:
@@ -1956,7 +2012,7 @@ class LakehouseTable:
                     )
             new_json = [f.to_json() for f in new_spec]
             if new_json == meta["partition_spec"]:
-                return
+                return None, False
             # retired specs are kept: files written under them keep their
             # layout, and the Iceberg exporter emits them as additional
             # partition-specs with per-manifest spec ids (multi-spec
@@ -1965,13 +2021,9 @@ class LakehouseTable:
             if meta["partition_spec"] not in hist:
                 hist.append(meta["partition_spec"])
             meta["partition_spec"] = new_json
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def _guard_column_ddl(self, meta: dict, col: str, action: str) -> None:
         spec_sources = {d["source"] for d in meta["partition_spec"]}
@@ -2010,8 +2062,8 @@ class LakehouseTable:
         RecordConverter.java:100-103) — no file rewrite at any scale.
         Partition-source and identifier columns are refused (specs here are
         name-keyed, not field-id-keyed like real Iceberg)."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             self._guard_column_ddl(meta, old, "rename")
             schema = T.StructType.fromJson(meta["schema"])
             names = [f.name for f in schema.fields]
@@ -2066,13 +2118,9 @@ class LakehouseTable:
                 meta["properties"][
                     f"write.parquet.bloom-filter-enabled.column.{new}"
                 ] = meta["properties"].pop(bloom_old)
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def drop_column(self, name: str) -> None:
         """Iceberg ``updateSchema().deleteColumn()`` parity: metadata-only —
@@ -2080,8 +2128,8 @@ class LakehouseTable:
         away (project_to_schema drops unknown file columns); the bytes stay
         in place until files are naturally rewritten. Partition-source and
         identifier columns are refused."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             self._guard_column_ddl(meta, name, "drop")
             schema = T.StructType.fromJson(meta["schema"])
             if name not in [f.name for f in schema.fields]:
@@ -2100,13 +2148,9 @@ class LakehouseTable:
                 meta["properties"]["schema.name-mapping.default"] = (
                     json.dumps(entries)
                 )
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     # ----------------------------------------------------------------- read
     def read(
@@ -4213,34 +4257,20 @@ class LakehouseTable:
         the branch head (rollback is an undo, not an arbitrary re-point —
         use branches for that). Abandoned snapshots stay readable via time
         travel until expire_snapshots()."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[dict, bool]:
             head = meta["refs"].get(branch)
             if head is None:
                 raise ValueError(f"branch {branch!r} has no snapshots")
-            sid = head
-            found = False
-            while sid is not None:
-                if sid == snapshot_id:
-                    found = True
-                    break
-                sid = self._snapshot_by_id(meta, sid)["parent"]
-            if not found:
+            if not self._is_ancestor(meta, snapshot_id, head):
                 raise ValueError(
                     f"snapshot {snapshot_id!r} is not an ancestor of "
                     f"{branch!r} head {head!r}"
                 )
-            if head == snapshot_id:
-                return self._snapshot_by_id(meta, snapshot_id)
             meta["refs"][branch] = snapshot_id
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return self._snapshot_by_id(meta, snapshot_id)
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        raise CommitConflict("unreachable")
+            return self._snapshot_by_id(meta, snapshot_id), head != snapshot_id
+
+        return self._update_metadata(mutate)
 
     def set_ref_retention(
         self,
@@ -4262,8 +4292,8 @@ class LakehouseTable:
             "min-snapshots-to-keep": min_snapshots_to_keep,
             "max-snapshot-age-ms": max_snapshot_age_ms,
         }
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             is_tag = name in meta.get("tags", {})
             if name not in meta["refs"] and not is_tag:
                 raise ValueError(f"no such ref {name!r}")
@@ -4285,13 +4315,9 @@ class LakehouseTable:
                     ret[k] = int(v)
             if not ret:
                 del meta["ref_retention"][name]
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def ref_retention(self) -> dict[str, dict]:
         return dict(self.metadata().get("ref_retention") or {})
@@ -4438,21 +4464,8 @@ class LakehouseTable:
                 for c, m in zip(cols, metas)
             ],
         }
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
-            stats = [
-                s
-                for s in meta.get("statistics", [])
-                if s["snapshot-id"] != sid
-            ]
-            meta["statistics"] = stats + [entry]
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return ndv
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+        self._register_stats_file("statistics", entry)
+        return ndv
 
     def _nearest_kmv_stats(self, branch: str = MAIN) -> dict | None:
         """The nearest-ancestor puffin-format statistics entry whose
@@ -4727,21 +4740,7 @@ class LakehouseTable:
             "statistics-path": rel,
             "file-size-in-bytes": os.path.getsize(path),
         }
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
-            pstats = [
-                s
-                for s in meta.get("partition-statistics", [])
-                if s["snapshot-id"] != sid
-            ]
-            meta["partition-statistics"] = pstats + [entry]
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return rows
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+        self._register_stats_file("partition-statistics", entry)
         return rows
 
     def _nearest_partition_stats(self, branch: str = MAIN) -> dict | None:
@@ -4829,8 +4828,9 @@ class LakehouseTable:
         global depth for its chain. Returns the number of expired
         snapshots. File cleanup is remove_orphan_files' job."""
         now = int(time.time() * 1000) if now_ms is None else now_ms
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+        written: list[str] = []
+
+        def mutate(meta: dict) -> tuple[int, bool]:
             retention = meta.get("ref_retention") or {}
             # retire aged-out refs (never main; Iceberg max-ref-age-ms)
             refs_retired = False
@@ -4896,20 +4896,10 @@ class LakehouseTable:
                 # ref retirement must still persist even when every
                 # snapshot survives (e.g. the aged-out ref shares a kept
                 # chain) — an early return here would silently undo it
-                if refs_retired:
-                    try:
-                        self._write_version(meta["version"] + 1, meta)
-                        return 0
-                    except CommitConflict:
-                        if attempt == COMMIT_RETRIES - 1:
-                            raise
-                        time.sleep(0.05 * (attempt + 1))
-                        continue
-                return 0
+                return 0, refs_retired
             # seal the oldest kept snapshot of each chain: its ancestry (and
             # the delta manifests along it) is about to disappear, so rewrite
             # its manifest as the FULL live set and mark it a chain root
-            sealed: list[str] = []
             for s in meta["snapshots"]:
                 if s["snapshot_id"] not in keep or s["parent"] in keep:
                     continue
@@ -4921,7 +4911,9 @@ class LakehouseTable:
                         "metadata",
                         f"man-{s['snapshot_id']}-sealed-{uuid.uuid4().hex[:8]}.json",
                     )
-                    with open(os.path.join(self.root, rel), "w") as f:
+                    path = os.path.join(self.root, rel)
+                    written.append(path)
+                    with open(path, "w") as f:
                         json.dump(
                             {
                                 "added_data_files": full_d,
@@ -4929,7 +4921,6 @@ class LakehouseTable:
                             },
                             f,
                         )
-                    sealed.append(rel)
                     s["manifest"] = rel
                     s["replace"] = True
                     # a sealed manifest is the FULL live set, not this
@@ -4945,16 +4936,9 @@ class LakehouseTable:
                 meta["statistics"] = [
                     s for s in meta["statistics"] if s["snapshot-id"] in keep
                 ]
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return len(expired)
-            except CommitConflict:
-                for rel in sealed:
-                    os.unlink(os.path.join(self.root, rel))
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return 0
+            return len(expired), True
+
+        return self._update_metadata(mutate, written)
 
     def remove_orphan_files(
         self,
@@ -5034,15 +5018,11 @@ class LakehouseTable:
         return orphans
 
     def create_branch(self, name: str, from_branch: str = MAIN) -> None:
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+        def mutate(meta: dict) -> tuple[None, bool]:
             meta["refs"][name] = meta["refs"].get(from_branch)
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
+            return None, True
+
+        self._update_metadata(mutate)
 
     def set_branch(self, name: str, snapshot_id: str) -> None:
         """Point ``name`` at an arbitrary EXISTING snapshot — Iceberg
@@ -5051,37 +5031,29 @@ class LakehouseTable:
         Unlike :meth:`rollback` there is no ancestry requirement: this is
         the re-point primitive branches exist for; the old head stays
         readable via time travel until ``expire_snapshots``."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             self._snapshot_by_id(meta, snapshot_id)  # must exist
             if meta["refs"].get(name) == snapshot_id:
-                return
+                return None, False
             meta["refs"][name] = snapshot_id
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def drop_branch(self, name: str) -> None:
         """Iceberg ``manageSnapshots().removeBranch`` parity. ``main`` is
         protected, as in Iceberg."""
         if name == MAIN:
             raise ValueError("cannot drop the main branch")
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             if name not in meta["refs"]:
-                return
+                return None, False
             del meta["refs"][name]
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def fast_forward(self, branch: str, to_branch: str) -> dict:
         """Fast-forward ``branch`` to ``to_branch``'s head — Iceberg
@@ -5094,34 +5066,21 @@ class LakehouseTable:
         history is exactly what was audited — a diverged branch raises
         instead of silently dropping commits (use rollback/branches to
         reconcile)."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[dict, bool]:
             target = meta["refs"].get(to_branch)
             if target is None:
                 raise ValueError(f"branch {to_branch!r} has no snapshots")
             head = meta["refs"].get(branch)
-            if head is not None:
-                sid, found = target, False
-                while sid is not None:
-                    if sid == head:
-                        found = True
-                        break
-                    sid = self._snapshot_by_id(meta, sid)["parent"]
-                if not found:
-                    raise ValueError(
-                        f"cannot fast-forward: {branch!r} head {head!r} is "
-                        f"not an ancestor of {to_branch!r} head {target!r}"
-                    )
-            if head == target:
-                return self._snapshot_by_id(meta, target)
+            if head is not None and not self._is_ancestor(meta, head, target):
+                raise ValueError(
+                    f"cannot fast-forward: {branch!r} head {head!r} is "
+                    f"not an ancestor of {to_branch!r} head {target!r}"
+                )
             meta["refs"][branch] = target
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return self._snapshot_by_id(meta, target)
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return self._snapshot_by_id(meta, target), head != target
+
+        return self._update_metadata(mutate)
 
     def _position_delete_refs(self, pos_files: list[dict]) -> set[str]:
         """Distinct data-file paths (storage form: root-relative, absolute
@@ -5180,8 +5139,11 @@ class LakehouseTable:
         duplicate-publication check).
 
         Scale: one O(files-in-snapshot) metadata commit; no data IO."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+        written: list[str] = []
+
+        def mutate(meta: dict) -> tuple[dict, bool]:
+            # validation and commit see the same head: a lost CAS re-runs
+            # both against the winner's metadata
             snap = self._snapshot_by_id(meta, snapshot_id)
             if snap.get("sealed") or (
                 snap.get("replace") and snap.get("parent") is not None
@@ -5248,20 +5210,15 @@ class LakehouseTable:
             }
             if wap is not None:
                 summary["published-wap-id"] = wap
-            try:
-                return self._commit_snapshot(
-                    snap.get("operation", "append"),
-                    d,
-                    dl,
-                    summary,
-                    branch,
-                    expected_parent=meta["refs"].get(branch),
-                )
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        raise AssertionError("unreachable")  # pragma: no cover
+            picked = self._stage_snapshot(
+                meta, written, snap.get("operation", "append"), d, dl,
+                summary, branch,
+            )
+            return picked, True
+
+        picked = self._update_metadata(mutate, written)
+        self._maybe_merge_manifests(picked["operation"], branch)
+        return picked
 
     def publish_wap(self, wap_id: str, branch: str = MAIN) -> dict:
         """Iceberg's publish-by-``wap.id`` (the ``spark.wap.id`` flow:
@@ -5295,20 +5252,16 @@ class LakehouseTable:
         tables take runtime behavior from properties the same way
         (write modes, commit knobs — SchemaUtils.java applies config onto
         the live table)."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             for k, v in props.items():
                 if v is None:
                     meta["properties"].pop(k, None)
                 else:
                     meta["properties"][k] = str(v)
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def create_tag(
         self,
@@ -5320,8 +5273,8 @@ class LakehouseTable:
         (``manageSnapshots().createTag()``) — releases/audit marks that
         survive snapshot expiry. Unlike a branch it can never be committed
         to; read it with ``read(tag=...)``."""
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[None, bool]:
             sid = snapshot_id or meta["refs"].get(branch)
             if sid is None:
                 raise ValueError(f"branch {branch!r} has no snapshot to tag")
@@ -5330,27 +5283,18 @@ class LakehouseTable:
             if name in tags and tags[name] != sid:
                 raise ValueError(f"tag {name!r} already exists (immutable)")
             tags[name] = sid
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def drop_tag(self, name: str) -> None:
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+        def mutate(meta: dict) -> tuple[None, bool]:
             if name not in meta.get("tags", {}):
-                return
+                return None, False
             del meta["tags"][name]
-            try:
-                self._write_version(meta["version"] + 1, meta)
-                return
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+            return None, True
+
+        self._update_metadata(mutate)
 
     def _reachable_snapshots(self, meta: dict) -> set[str]:
         """Hex ids of every snapshot reachable from any ref or tag head by
@@ -5377,13 +5321,13 @@ class LakehouseTable:
         :meth:`expire_snapshots`, which understands retention. Returns the
         number actually removed (absent ids are idempotent no-ops)."""
         targets = set(snapshot_ids)
-        for attempt in range(COMMIT_RETRIES):
-            meta = self.metadata()
+
+        def mutate(meta: dict) -> tuple[list[dict], bool]:
             present = [
                 s for s in meta["snapshots"] if s["snapshot_id"] in targets
             ]
             if not present:
-                return 0
+                return [], False
             reachable = self._reachable_snapshots(meta)
             bad = [
                 s["snapshot_id"]
@@ -5395,25 +5339,18 @@ class LakehouseTable:
                     f"snapshots {bad} are referenced by a branch or tag "
                     "(directly or via ancestry); use expire_snapshots"
                 )
-            removed_manifests = [
-                s["manifest"] for s in present if "manifest" in s
-            ]
             meta["snapshots"] = [
                 s
                 for s in meta["snapshots"]
                 if s["snapshot_id"] not in targets
             ]
-            try:
-                self._write_version(meta["version"] + 1, meta)
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-                continue
-            for rel in removed_manifests:
+            return present, True
+
+        present = self._update_metadata(mutate)
+        for s in present:
+            if "manifest" in s:
                 try:
-                    os.unlink(os.path.join(self.root, rel))
+                    os.unlink(os.path.join(self.root, s["manifest"]))
                 except OSError:
                     pass  # manifest cleanup is best-effort after the CAS
-            return len(present)
-        raise CommitConflict("unreachable")
+        return len(present)

@@ -17,10 +17,11 @@ Structured Streaming replaces all of it:
   writes
 
 Scale: the batch DataFrame is persisted once and every routed table write is
-a column-pruned pass; per-table commits are independent snapshots (they can
-be submitted from a thread pool like the reference's commit.threads — writes
-here are sequential for determinism, the table commit protocol is already
-concurrency-safe).
+a column-pruned pass; per-table commits are independent snapshots. They run
+one after another by default; with ``commit_threads > 1`` and more than one
+routed table they run on a thread pool like the reference's commit.threads,
+which the table commit protocol (one optimistic, retried metadata commit per
+change) makes safe.
 """
 
 from __future__ import annotations
@@ -124,7 +125,7 @@ class SinkPipeline:
                 )
                 .persist()
             )
-            props, n_bad = self._stats(parsed, batch_id)
+            props, n_bad, n_good = self._stats(parsed, batch_id)
             if props is None:
                 parsed.unpersist()
                 return  # empty batch
@@ -140,7 +141,7 @@ class SinkPipeline:
                         f"{sample['partition']}:{sample['offset']} "
                         "(errors.tolerance=none)"
                     )
-            if props.pop("__n_good", 0) == 0:
+            if n_good == 0:
                 parsed.unpersist()
                 return  # nothing valid to land (DLQ already handled)
             records = (
@@ -162,7 +163,9 @@ class SinkPipeline:
             if parsed is None:
                 if records.isEmpty():
                     return
-                props = self._snapshot_props(batch, batch_id)
+                # unparsed batch: null values are tombstones, none is bad
+                flags = {"__tomb": F.col("value").isNull(), "__bad": F.lit(False)}
+                props, _, _ = self._stats(batch.withColumns(flags), batch_id)
             routed = self._route(records)
             # no-files ⇒ no commit (Coordinator.java commit path: a table
             # with nothing to commit gets no snapshot; the reference even
@@ -291,9 +294,14 @@ class SinkPipeline:
 
     # ------------------------------------------------------- snapshot props
     @staticmethod
-    def _stats(parsed: DataFrame, batch_id: int) -> tuple[dict | None, int]:
-        """Single pass: per-partition offsets + VTTS + malformed count.
-        Returns (props, n_bad); props is None for an empty batch."""
+    def _stats(
+        parsed: DataFrame, batch_id: int
+    ) -> tuple[dict | None, int, int]:
+        """Single pass over the whole batch (tombstones included): the
+        offsets JSON (S2: max offset + 1 per topic-partition), the VTTS
+        (A2: min over partitions of max record timestamp) and the
+        malformed (``__bad``) and valid record counts. Returns (props,
+        n_bad, n_good); props is None for an empty batch."""
         rows = (
             parsed.groupBy("topic", "partition")
             .agg(
@@ -307,42 +315,20 @@ class SinkPipeline:
             .collect()
         )
         if not rows:
-            return None, 0
+            return None, 0, 0
         offsets = {f"{r['topic']}-{r['partition']}": r["next_offset"] for r in rows}
         vtts = min((r["max_ts"] for r in rows), default=None)
-        n_bad = sum(r["n_bad"] or 0 for r in rows)
         props = {
             BATCH_ID_PROP: str(batch_id),
             OFFSETS_PROP: json.dumps(offsets, sort_keys=True),
-            "__n_good": sum(r["n_good"] or 0 for r in rows),  # internal
         }
         if vtts is not None:
             props[VTTS_PROP] = str(vtts)
-        return props, n_bad
-
-    @staticmethod
-    def _snapshot_props(records: DataFrame, batch_id: int) -> dict:
-        """Offsets JSON (S2: max offset + 1 per topic-partition) and VTTS
-        (A2: min over partitions of max record timestamp)."""
-        per_part = (
-            records.groupBy("topic", "partition")
-            .agg(
-                (F.max("offset") + 1).alias("next_offset"),
-                F.unix_millis(F.max("timestamp")).alias("max_ts"),
-            )
-            .collect()
+        return (
+            props,
+            sum(r["n_bad"] or 0 for r in rows),
+            sum(r["n_good"] or 0 for r in rows),
         )
-        offsets = {
-            f"{r['topic']}-{r['partition']}": r["next_offset"] for r in per_part
-        }
-        vtts = min((r["max_ts"] for r in per_part), default=None)
-        props = {
-            BATCH_ID_PROP: str(batch_id),
-            OFFSETS_PROP: json.dumps(offsets, sort_keys=True),
-        }
-        if vtts is not None:
-            props[VTTS_PROP] = str(vtts)
-        return props
 
     # ----------------------------------------------------------- table write
     def _write_table(self, name: str, df: DataFrame, props: dict) -> None:

@@ -493,6 +493,28 @@ def test_trailing_tombstones_still_advance_offsets(spark, tmp_path, catalog):
     assert offs == {"events-0": 3}
 
 
+def test_trailing_tombstones_advance_offsets_without_value_schema(
+    spark, tmp_path, catalog
+):
+    """Without a value schema the batch lands unparsed, and its offsets and
+    VTTS still come from the whole batch: a partition whose last record is
+    a tombstone reports the offset after it."""
+    cfg = SinkConfig(tables=[TableConfig("default.tomb_raw")], auto_create=True)
+    pipe = SinkPipeline(catalog, cfg, "p-tr")
+    src = tmp_path / "src"
+    rec = {"id": 0, "type": "t", "payload": None, "op": None}
+    _write_records(src, [rec, None, None])  # partition 0: offsets 0..2
+    _write_records(src, [rec], offset0=10, partition=1)  # offset 10
+    _run(spark, pipe, src, tmp_path / "ckpt")
+    t = catalog.load_table("default.tomb_raw")
+    assert t.read(spark).count() == 2
+    summary = t.current_snapshot()["summary"]
+    offs = json.loads(summary["kafka.connect.offsets"])
+    assert offs == {"events-0": 3, "events-1": 11}
+    # VTTS: min over partitions of the latest timestamp, 00:00:02 (p0)
+    assert summary["vtts-ms"] == "1704067202000"
+
+
 def test_scalar_json_value_goes_to_dlq(spark, tmp_path, catalog):
     """ADVICE fix: valid JSON that is not a schema-shaped object (bare
     scalar / array) is malformed — DLQ'd under errors.tolerance=all and
