@@ -6,10 +6,16 @@ re-planning, skew-join splitting, partition coalescing), broadcast threshold
 raised so dimension tables never shuffle, UTC session timezone so timestamp
 semantics are deployment-independent, Arrow enabled for the few pandas-UDF
 paths.
+
+Runtime session conf is set only in this module. A session is shared by
+every query on it (a ``foreachBatch`` sink's with the user's own), so engine
+code — commit paths above all — shapes its plans instead of toggling
+session state; ``tests/test_session_conf_guard.py`` enforces it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -134,3 +140,26 @@ def tune_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def read_parquet_nanos_as_long(spark: SparkSession) -> None:
+    """Read parquet TIMESTAMP(NANOS) columns as BIGINT nanoseconds (Spark
+    refuses the type otherwise); callers convert them to timestamps."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+@contextlib.contextmanager
+def few_state_partitions(spark: SparkSession, n: int = 8):
+    """Bounded-size replay gates don't need 32 state partitions — the
+    state store pays per-partition-per-microbatch task overhead, which
+    dominates at gate scale. The stream's checkpoint pins the partition
+    count at FIRST run, so setting it for the whole gate keeps every
+    run consistent; the finally restores the session default even when
+    a run times out or errors."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)

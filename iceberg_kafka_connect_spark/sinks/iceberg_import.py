@@ -611,27 +611,6 @@ def _put_metadata(table: LakehouseTable, fields: dict) -> None:
     table._update_metadata(mutate)
 
 
-def cover_entry_sequences(
-    table: LakehouseTable, snap: dict, entries: list[dict]
-) -> dict:
-    """Raise a just-committed snapshot's sequence number to the highest
-    sequence number its imported ``entries`` carry, and return the
-    snapshot as committed. Later equality deletes are assigned
-    parent_seq + 1 and only suppress data with a STRICTLY LOWER seq, so a
-    commit left below its entries would orphan imported multi-sequence
-    history."""
-    max_seq = max((e["seq"] for e in entries), default=1)
-    if max_seq <= snap["sequence_number"]:
-        return snap
-
-    def mutate(meta: dict) -> tuple[dict, bool]:
-        raised = table._snapshot_by_id(meta, snap["snapshot_id"])
-        raised["sequence_number"] = max_seq
-        return raised, True
-
-    return table._update_metadata(mutate)
-
-
 def import_iceberg_table(
     source: str,
     dest_root: str,
@@ -817,12 +796,9 @@ def import_iceberg_table(
             "import.data-files": str(len(data_files)),
             "import.delete-files": str(len(delete_files)),
         }
-        snap_int = table._commit_snapshot(
+        return table._commit_snapshot(
             "append", data_files, delete_files, summary, branch,
             preserve_seq=True,
-        )
-        return cover_entry_sequences(
-            table, snap_int, data_files + delete_files
         )
 
     imported: dict[int, dict] = {snapshot_id: _commit_ref(snapshot_id, MAIN)}
@@ -1153,19 +1129,15 @@ def refresh_from_iceberg(
             "import.data-files": str(len(added_data)),
             "import.delete-files": str(len(added_del)),
         }
-        if removed:
-            # the external snapshot dropped files (rewrite/expire):
-            # mirror its FULL live set as a replace commit
-            snap_int = table._commit_snapshot(
-                "replace", cur_data, cur_del, summary, MAIN,
-                replace=True, preserve_seq=True,
-            )
-        else:
-            snap_int = table._commit_snapshot(
-                "append", added_data, added_del, summary, MAIN,
-                preserve_seq=True,
-            )
-        cover_entry_sequences(table, snap_int, cur_data + cur_del)
+        # an external snapshot that dropped files (rewrite/expire) is
+        # mirrored as a replace commit of its FULL live set
+        data, deletes = (
+            (cur_data, cur_del) if removed else (added_data, added_del)
+        )
+        table._commit_snapshot(
+            "replace" if removed else "append", data, deletes, summary,
+            MAIN, replace=removed, preserve_seq=True,
+        )
         prev_data, prev_del = cur_data, cur_del
         synced += 1
 

@@ -865,40 +865,9 @@ class _Handler(JsonHandler):
         with ExitStack() as stack:
             for full in sorted({f for f, _ in per_table}):
                 stack.enter_context(self.state.table_lock(full))
-            prepared: list[tuple[str, list]] = []
-            for full, ch in per_table:
-                table = self.state.catalog.load_table(full)
-                meta = table.metadata()
-                int_to_hex = _int_id_map(meta)
-                self._check_requirements(
-                    ch.get("requirements") or [], table, meta, int_to_hex
-                )
-                updates = ch.get("updates") or []
-                needs_served = any(
-                    (u.get("action") or u.get("type")) == "add-snapshot"
-                    for u in updates
-                )
-                ctx = {
-                    "meta": meta,
-                    "int_to_hex": int_to_hex,
-                    "hex_to_int": {h: i for i, h in int_to_hex.items()},
-                    "staged": {},
-                    "claimed": {},
-                    "served": (
-                        self.state.current_metadata(full)[1]
-                        if needs_served
-                        else None
-                    ),
-                }
-                prepared.append(
-                    (
-                        full,
-                        [
-                            self._prepare_update(table, up, ctx)
-                            for up in updates
-                        ],
-                    )
-                )
+            prepared = [
+                (full, self._prepare_commit(full, ch)) for full, ch in per_table
+            ]
             try:
                 for full, actions in prepared:
                     for act in actions:
@@ -915,37 +884,7 @@ class _Handler(JsonHandler):
             raise _err(404, "NoSuchTableException", f"table {full!r} not found")
         lock = self.state.table_lock(full)
         with lock:
-            table = self.state.catalog.load_table(full)
-            meta = table.metadata()
-            int_to_hex = _int_id_map(meta)
-            self._check_requirements(
-                body.get("requirements") or [], table, meta, int_to_hex
-            )
-            updates = body.get("updates") or []
-            needs_served = any(
-                (u.get("action") or u.get("type")) == "add-snapshot"
-                for u in updates
-            )
-            ctx = {
-                "meta": meta,
-                "int_to_hex": int_to_hex,
-                "hex_to_int": {h: i for i, h in int_to_hex.items()},
-                "staged": {},   # ext int sid -> prepared commit (add-snapshot)
-                "claimed": {},  # ext int sid -> ref-name that commits it
-                # the exported metadata the external writer worked against;
-                # only materialized when a snapshot-producing update needs it
-                "served": (
-                    self.state.current_metadata(full)[1]
-                    if needs_served
-                    else None
-                ),
-            }
-            # phase 1 — validate and PREPARE every update before applying
-            # any: a malformed update rejects the whole commit with nothing
-            # applied (the protocol's atomic-commit contract; previously
-            # updates applied one at a time, so a late failure left earlier
-            # ones committed and a retry double-applied them)
-            actions = [self._prepare_update(table, up, ctx) for up in updates]
+            actions = self._prepare_commit(full, body)
             # phase 2 — apply in order (validation already done; the only
             # failures left are storage-level CAS races, surfaced as 409)
             try:
@@ -959,6 +898,41 @@ class _Handler(JsonHandler):
         self._send(
             200, {"metadata-location": f"file://{loc}", "metadata": served}
         )
+
+    def _prepare_commit(self, full: str, change: dict) -> list:
+        """Phase 1 of one table's commit (a ``_commit`` body or one
+        ``table-changes`` entry of a transaction): load the table, check
+        the change's requirements against its head, then validate and
+        PREPARE every update before any is applied — a malformed update
+        rejects the whole commit with nothing applied (the protocol's
+        atomic-commit contract). Returns the apply callables in order
+        (None for acknowledged no-ops)."""
+        table = self.state.catalog.load_table(full)
+        meta = table.metadata()
+        int_to_hex = _int_id_map(meta)
+        self._check_requirements(
+            change.get("requirements") or [], table, meta, int_to_hex
+        )
+        updates = change.get("updates") or []
+        needs_served = any(
+            (u.get("action") or u.get("type")) == "add-snapshot"
+            for u in updates
+        )
+        ctx = {
+            "meta": meta,
+            "int_to_hex": int_to_hex,
+            "hex_to_int": {h: i for i, h in int_to_hex.items()},
+            "staged": {},   # ext int sid -> prepared commit (add-snapshot)
+            "claimed": {},  # ext int sid -> ref-name that commits it
+            # the exported metadata the external writer worked against;
+            # only materialized when a snapshot-producing update needs it
+            "served": (
+                self.state.current_metadata(full)[1]
+                if needs_served
+                else None
+            ),
+        }
+        return [self._prepare_update(table, up, ctx) for up in updates]
 
     def _check_requirements(
         self, reqs: list[dict], table, meta: dict, int_to_hex: dict
@@ -1305,63 +1279,51 @@ class _Handler(JsonHandler):
     ):
         """Apply half of add-snapshot: ONE native atomic commit. The
         summary records the writer's assigned id so the exporter serves
-        the snapshot back under exactly that id (rest.assigned-id)."""
-        from .iceberg_import import cover_entry_sequences
+        the snapshot back under exactly that id (rest.assigned-id).
 
+        Entries may carry external sequence numbers beyond the native
+        counter; ``preserve_seq`` stages the snapshot at or above the
+        highest one it carries, so later deletes order correctly."""
         prep = ctx["staged"][sid]
         summary = {
             "operation": prep["operation"],
             "rest.assigned-id": str(sid),
             "rest.commit": "true",
         }
-        on_branch = (
-            rtype == "branch"
-            and ref is not None
-            and ctx["meta"]["refs"].get(ref) is not None
+        head = ctx["meta"]["refs"].get(ref) if rtype == "branch" else None
+        # by default a self-contained full-set snapshot: on a brand-new
+        # branch, or on a hidden staging branch for an unreferenced or tag
+        # target (dropped below for tags; kept for later publication when
+        # nothing references the snapshot yet)
+        data, deletes = prep["full_data"], prep["full_deletes"]
+        replace = True
+        target = (
+            ref
+            if rtype == "branch" and ref is not None
+            else f"{STAGED_REF_PREFIX}{sid}"
         )
-        if on_branch:
+        if head is not None:
             # in-place commit onto the existing branch head; expected_parent
-            # turns a storage-side race into the protocol's 409
-            snap_int = table._commit_snapshot(
-                prep["operation"],
-                prep["data"],
-                prep["deletes"],
-                summary,
-                ref,
-                replace=prep["replace"],
-                preserve_seq=True,
-                expected_parent=ctx["meta"]["refs"].get(ref),
+            # turns a storage-side race into the protocol's 409. It stages
+            # only the added entries, so it needs the sequence number it
+            # gets to cover the entries carried over from the head too —
+            # otherwise the full set is staged, covering its maximum
+            head_seq = table._snapshot_by_id(ctx["meta"], head)["sequence_number"]
+            staged_seq = max(
+                [head_seq + 1, *(e["seq"] for e in prep["data"] + prep["deletes"])]
             )
-        elif rtype == "branch" and ref is not None:
-            # brand-new branch: self-contained full-set snapshot
-            snap_int = table._commit_snapshot(
-                prep["operation"],
-                prep["full_data"],
-                prep["full_deletes"],
-                summary,
-                ref,
-                replace=True,
-                preserve_seq=True,
-            )
-        else:
-            # unreferenced or tag target: full set on a hidden staging
-            # branch (dropped below for tags; kept for later publication
-            # when nothing references the snapshot yet)
-            staging = f"{STAGED_REF_PREFIX}{sid}"
-            snap_int = table._commit_snapshot(
-                prep["operation"],
-                prep["full_data"],
-                prep["full_deletes"],
-                summary,
-                staging,
-                replace=True,
-                preserve_seq=True,
-            )
-        # mirror refresh_from_iceberg: entries may carry external sequence
-        # numbers beyond the native counter — the snapshot's own sequence
-        # number must cover them so later deletes order correctly
-        cover_entry_sequences(
-            table, snap_int, prep["full_data"] + prep["full_deletes"]
+            if all(e["seq"] <= staged_seq for e in data + deletes):
+                data, deletes = prep["data"], prep["deletes"]
+                replace = prep["replace"]
+        snap_int = table._commit_snapshot(
+            prep["operation"],
+            data,
+            deletes,
+            summary,
+            target,
+            replace=replace,
+            preserve_seq=True,
+            expected_parent=head,
         )
         if rtype == "tag" and ref is not None:
             try:

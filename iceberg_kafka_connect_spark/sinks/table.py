@@ -32,14 +32,12 @@ data files to bound read amplification, exactly like Iceberg maintenance.
 
 from __future__ import annotations
 
-import contextlib
 import glob as globmod
 import json
 import logging
 import os
 import re
 import shutil
-import threading
 import time
 import uuid
 
@@ -56,53 +54,47 @@ COMMIT_RETRIES = 3  # IcebergSinkConfig.java:103-104 (schema/create retries)
 COMMIT_BACKOFF_S = 0.05  # the n-th lost CAS backs off n × this
 MAIN = "main"
 
-_CACHE_FLAG = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-_CACHE_FLAG_LOCK = threading.Lock()
-# session → [open commit_sized_caches contexts, flag value before the first]
-_cache_flag_holds: dict = {}
+def _distribute(
+    df: DataFrame,
+    props: dict,
+    pcols: list[str],
+    sort_cols: list[str],
+    sort_by: list[str] | None = None,
+    staged_keys: list[str] | None = None,
+) -> DataFrame:
+    """The one write-distribution rule (Iceberg SparkWrite parity); a
+    write shuffles at most once. ``hash`` puts each partition value on one
+    task (one file per value instead of one per task × value); ``range``
+    range-clusters on partition + sort columns so file bounds are
+    disjoint; with no table policy an ad-hoc ``sort_by`` range-clusters.
+    Otherwise a delta staged in a batch persisted for reuse (``staged_keys``
+    set: its key columns, [] for position deletes) keeps the width it was
+    cached at, so it gets a REBALANCE that AQE sizes from the data — a tiny
+    commit lands one file, not one per shuffle partition. It hashes on the
+    partition columns, else on the keys: the batch was collapsed by key, so
+    each task keeps its rows together and in order (round-robin scattered
+    them: 4% more bytes per cdc_upsert_read batch). Appends and overwrites
+    under ``none`` keep their upstream distribution (a rebalance measured
+    slower on small appends). Rows are sorted within tasks by the sort
+    order that applied."""
+    mode = props.get("write.distribution-mode", "none").lower()
+    if pcols and mode == "hash":
+        df = df.repartition(*pcols)
+    elif mode == "range" and (pcols or sort_cols):
+        df = df.repartitionByRange(*pcols, *sort_cols)
+    elif sort_by and mode == "none" and not sort_cols:
+        df = df.repartitionByRange(*sort_by)
+        sort_cols = sort_by
+    elif staged_keys is not None:
+        df = df.hint("rebalance", *(pcols or staged_keys))
+    return df.sortWithinPartitions(*sort_cols) if sort_cols else df
 
 
-@contextlib.contextmanager
-def commit_sized_caches(spark: SparkSession):
-    """Let AQE right-size the cached frames a table mutation materializes
-    (optimization guide §2.2 "fewer, larger reduce partitions" / §6 small
-    files). The collapsed upsert batch, the MERGE mark frame and the DML
-    matched frames are persisted right after a shuffle; with
-    ``canChangeCachedPlanOutputPartitioning`` at its default (false) the
-    cache pins the raw shuffle width (defaultParallelism), so every tiny
-    commit fans into one file PER SHUFFLE PARTITION — 32 micro-files plus
-    32 footer stats per commit at local widths, and downstream
-    merge-on-read scans of the table pay one task per micro-file. With the
-    flag on, AQE coalesces the cached plan to its data size (parallelism-
-    first, so real-scale batches keep every core busy), which is exactly
-    the write.distribution guidance of guide §6. Scoped to the mutation
-    call rather than the session: analytics operators persist big shuffled
-    intermediates whose fixed width keeps the compute wide (measured: a
-    session-wide flag cost docs_span_dedup 1.23x, dedup_incremental
-    1.12x), so only commit-path caches opt in.
-
-    Thread-safe and reentrant per session: commits running concurrently
-    on one session (``commit_threads>1``) share one hold — the first to
-    enter sets the flag, the last to leave restores the value it found
-    (an unset conf goes back to unset)."""
-    with _CACHE_FLAG_LOCK:
-        hold = _cache_flag_holds.get(spark)
-        if hold is None:
-            hold = [0, spark.conf.get(_CACHE_FLAG, None)]
-            _cache_flag_holds[spark] = hold
-            spark.conf.set(_CACHE_FLAG, "true")
-        hold[0] += 1
-    try:
-        yield
-    finally:
-        with _CACHE_FLAG_LOCK:
-            hold[0] -= 1
-            if hold[0] == 0:
-                del _cache_flag_holds[spark]
-                if hold[1] is None:
-                    spark.conf.unset(_CACHE_FLAG)
-                else:
-                    spark.conf.set(_CACHE_FLAG, hold[1])
+def _file_format(props: dict) -> str:
+    fmt = props.get("write.format.default", "parquet").lower()
+    if fmt not in ("parquet", "orc", "avro"):
+        raise ValueError(f"unsupported write.format.default: {fmt}")
+    return fmt
 
 
 def _register_codecs_by_value() -> None:
@@ -550,10 +542,21 @@ class LakehouseTable:
     ) -> dict:
         """Write the manifest of a new snapshot on ``branch`` (its path
         goes to ``written``) and add the snapshot to ``meta``; the caller
-        commits ``meta`` through ``_update_metadata``."""
+        commits ``meta`` through ``_update_metadata``.
+
+        Under ``preserve_seq`` the snapshot's sequence number is the larger
+        of parent + 1 and the highest sequence number its carried entries
+        keep: a later equality delete (assigned this number + 1) only
+        suppresses data with a strictly lower one, so a snapshot below its
+        own entries — an import of multi-sequence history, a clone — would
+        leave them undeletable."""
         parent_id = meta["refs"].get(branch)
         parent = self._snapshot_by_id(meta, parent_id) if parent_id else None
         seq = (parent["sequence_number"] + 1) if parent else 1
+        if preserve_seq:
+            seq = max(
+                [seq, *(e["seq"] for e in data_files + delete_files if "seq" in e)]
+            )
         sid = uuid.uuid4().hex
         manifest_rel = os.path.join("metadata", f"man-{sid}.json")
         manifest_path = os.path.join(self.root, manifest_rel)
@@ -697,56 +700,53 @@ class LakehouseTable:
         (Utilities.java:160-167) — parquet (default), orc, or avro (avro via
         the self-contained OCF codec in sinks/avro_io.py: no spark-avro jar
         in this deployment)."""
-        fmt = self.properties().get("write.format.default", "parquet").lower()
-        if fmt not in ("parquet", "orc", "avro"):
-            raise ValueError(f"unsupported write.format.default: {fmt}")
-        return fmt
+        return _file_format(self.properties())
 
-    def _write_files(self, df: DataFrame, subdir: str) -> list[dict]:
+    def _write_files(
+        self,
+        df: DataFrame,
+        subdir: str,
+        sort_by: list[str] | None = None,
+        staged_keys: list[str] | None = None,
+    ) -> list[dict]:
         """Write a DataFrame as data files under a fresh uuid dir; the
         derived partition columns (if any) are appended and partitionBy'd so
         readers get directory pruning. Avro keeps partition columns inline
         (our OCF reader reads explicit file lists; no directory layout to
-        prune)."""
-        fmt = self.file_format()
+        prune).
+
+        One metadata load serves the whole write: format, partition spec,
+        sort order, distribution mode, bloom-filter and file-size
+        properties. ``_distribute`` shapes the frame from them plus the
+        ad-hoc ``sort_by`` (``rewrite_where``) and ``staged_keys`` (a
+        row-level delta written by ``_write_delete_and_data``)."""
+        meta = self.metadata()
+        props = meta["properties"]
+        fmt = _file_format(props)
         out_dir = os.path.join(self.root, subdir, uuid.uuid4().hex)
         writer = df
-        pcols = []
+        pcols: list[str] = []
+        sort_cols: list[str] = []
         if subdir == "data":
-            # delete-key files carry only the key columns — never partitioned
-            for f in self.partition_spec():
+            # delete files carry only key columns or positions — never
+            # partitioned, never sorted
+            for d in meta["partition_spec"]:
+                f = PartitionField.from_json(d)
                 if f.name not in df.columns:
                     writer = writer.withColumn(f.name, f.expr())
                 if fmt != "avro":
                     pcols.append(f.name)
-        # write.sort-order: cluster rows inside files so parquet min/max
-        # stats prune row groups for predicates on the sort columns — the
-        # Iceberg sort-order table property, Spark-native
-        sort_order = self.properties().get("write.sort-order")
-        sort_cols = (
-            [c.strip() for c in sort_order.split(",") if c.strip()]
-            if sort_order
-            else []
+            # write.sort-order: cluster rows inside files so parquet
+            # min/max stats prune row groups for predicates on the sort
+            # columns — the Iceberg sort-order table property
+            sort_cols = [
+                c.strip()
+                for c in (props.get("write.sort-order") or "").split(",")
+                if c.strip()
+            ]
+        writer = _distribute(
+            writer, props, pcols, sort_cols, sort_by, staged_keys
         )
-        # write.distribution-mode (Iceberg SparkWrite parity): a partitioned
-        # write with no distribution emits one file per (task × partition
-        # value) — the classic small-files explosion once tasks × partitions
-        # grows. "hash" co-locates each partition value on one task (one
-        # shuffle, one file per partition value per commit); "range"
-        # additionally range-clusters on partition + sort columns so file
-        # bounds are disjoint for stats pruning. Default "none" keeps the
-        # upstream distribution.
-        dist = self.properties().get("write.distribution-mode", "none").lower()
-        if subdir == "data" and pcols and dist == "hash":
-            writer = writer.repartition(*[F.col(c) for c in pcols])
-        elif subdir == "data" and dist == "range" and (pcols or sort_cols):
-            # unpartitioned + sort-order is a first-class range case: the
-            # clustering is exactly what makes file bounds disjoint
-            writer = writer.repartitionByRange(
-                *[F.col(c) for c in (pcols + sort_cols)]
-            )
-        if sort_cols and subdir == "data":
-            writer = writer.sortWithinPartitions(*sort_cols)
         if fmt == "avro":
             from . import avro_io
 
@@ -771,7 +771,7 @@ class LakehouseTable:
         # can't, via the native parquet reader's bloom check.
         if fmt == "parquet" and subdir == "data":
             bloom_prefix = "write.parquet.bloom-filter-enabled.column."
-            for prop, val in self.properties().items():
+            for prop, val in props.items():
                 if prop.startswith(bloom_prefix):
                     col = prop[len(bloom_prefix):]
                     w = w.option(f"parquet.bloom.filter.enabled#{col}", val)
@@ -781,11 +781,11 @@ class LakehouseTable:
         # bytes/row (live manifest bytes ÷ rows — pure metadata, no scan).
         # First commit has no history and rolls by task output; explicit
         # `write.target-file-rows` overrides.
-        target_rows = self.properties().get("write.target-file-rows")
+        target_rows = props.get("write.target-file-rows")
         if not target_rows and subdir == "data":
-            target_bytes = self.properties().get("write.target-file-size-bytes")
+            target_bytes = props.get("write.target-file-size-bytes")
             if target_bytes:
-                row_bytes = self._observed_row_bytes()
+                row_bytes = self._observed_row_bytes(meta)
                 if row_bytes:
                     target_rows = max(1, int(int(target_bytes) / row_bytes))
         if target_rows:
@@ -813,7 +813,7 @@ class LakehouseTable:
             # record the file's in-file sort so metadata consumers
             # (iceberg_export sort_order_id) claim only files actually
             # written under the current order
-            if sort_cols and subdir == "data":
+            if sort_cols:
                 entry["sort"] = list(sort_cols)
         if fmt == "parquet" and subdir == "data":
             # Iceberg manifests carry per-column lower/upper bounds per data
@@ -838,12 +838,18 @@ class LakehouseTable:
                     entry["stats"] = st
         return files
 
-    def _observed_row_bytes(self) -> float | None:
-        """Mean on-disk bytes per row over live data files whose entries
-        carry both sizes and row counts — the history-based estimate that
-        converts a byte file-size target into Spark's rows-per-file knob."""
+    def _observed_row_bytes(self, meta: dict) -> float | None:
+        """Mean on-disk bytes per row over the main branch's live data
+        files whose entries carry both sizes and row counts — the
+        history-based estimate that converts a byte file-size target into
+        Spark's rows-per-file knob."""
+        head = meta["refs"].get(MAIN)
+        if head is None:
+            return None
         try:
-            data_files, _ = self.live_files()
+            data_files, _ = self._live_files(
+                meta, self._snapshot_by_id(meta, head)
+            )
         except Exception:
             return None
         tot_b = tot_r = 0
@@ -941,7 +947,7 @@ class LakehouseTable:
         per-op window pass — are skipped entirely. The caller owns the
         guarantee; duplicate keys under this flag produce duplicate rows.
         """
-        from ..operators.cdc import DELETE, collapse_last_wins
+        from ..operators.cdc import DELETE, UPDATE, collapse_last_wins
 
         if key_cols is None:
             # BaseDeltaTaskWriter parity: the schema's identifier fields
@@ -951,36 +957,49 @@ class LakehouseTable:
                 raise ValueError(
                     "upsert needs key_cols (table has no identifier fields)"
                 )
-        if op_col is not None and op_col in df.columns and not upsert_mode:
-            return self._upsert_per_op(
-                df, key_cols, op_col, order_cols, branch, snapshot_props,
-                case_insensitive, assume_unique,
-            )
+        per_op = op_col is not None and op_col in df.columns and not upsert_mode
+        ranked = per_op and not assume_unique
         batch = df
-        if assume_unique:
+        if ranked:
+            batch = self._rank_ops(df, key_cols, op_col, order_cols)
+        elif assume_unique:
             pass
         elif order_cols:
             batch = collapse_last_wins(batch, key_cols, order_cols)
         else:
             batch = batch.dropDuplicates(key_cols)
-        with commit_sized_caches(df.sparkSession):
-            batch = batch.persist()
-            try:
+        batch = batch.persist()
+        try:
+            inserts = batch
+            if ranked:
+                keys = (
+                    batch.filter(F.col("__ud_rank").isNotNull())
+                    .select(*key_cols)
+                    .distinct()
+                )
+                inserts = batch.filter(
+                    F.col("__ud_rank").isNull()
+                    | (F.col("__rank") >= F.col("__ud_rank"))
+                ).drop("__rank", "__ud_rank", "__ord")
+            elif per_op:
+                # one row per key: the per-op window degenerates, and only
+                # UPDATE/DELETE rows delete their key
+                keys = batch.filter(F.col(op_col).isin(UPDATE, DELETE))
+                keys = keys.select(*key_cols)
+            else:
                 keys = batch.select(*key_cols)
-                if op_col is not None and op_col in batch.columns:
-                    inserts = batch.filter(F.col(op_col) != DELETE)
-                else:
-                    inserts = batch
-                data = self._project(inserts, case_insensitive)
-                delete_files, data_files = self._write_delete_and_data(
-                    keys, key_cols, data
-                )
-                return self._commit_snapshot(
-                    "overwrite", data_files, delete_files,
-                    snapshot_props or {}, branch,
-                )
-            finally:
-                batch.unpersist()
+            if op_col is not None and op_col in batch.columns:
+                inserts = inserts.filter(F.col(op_col) != DELETE)
+            data = self._project(inserts, case_insensitive)
+            delete_files, data_files = self._write_delete_and_data(
+                keys, key_cols, data
+            )
+            return self._commit_snapshot(
+                "overwrite", data_files, delete_files,
+                snapshot_props or {}, branch,
+            )
+        finally:
+            batch.unpersist()
 
     def _written_rows(self, entries: list[dict]) -> int | None:
         """Total rows across freshly written parquet entries, read off
@@ -1017,76 +1036,89 @@ class LakehouseTable:
         for base in {e.get("base") for e in entries if e.get("base")}:
             shutil.rmtree(os.path.join(self.root, base), ignore_errors=True)
 
-    def _write_delete_files(self, keys: DataFrame, key_cols: list[str]) -> list[dict]:
-        """Write equality-delete key files, stamping the key column set on
-        each entry (read() groups merge-on-read joins by that set)."""
+    def _write_delete_files(
+        self,
+        deletes: DataFrame,
+        key_cols: list[str] | None,
+        staged_keys: list[str] | None = None,
+    ) -> list[dict]:
+        """Write delete files and stamp each entry with its delete kind:
+        equality deletes record their key column set (read() groups
+        merge-on-read joins by it); ``key_cols=None`` marks position
+        deletes (``file_path``, ``pos`` rows)."""
+        stamp = (
+            {"delete_type": "position"}
+            if key_cols is None
+            else {"key_cols": list(key_cols)}
+        )
         return [
-            {**f, "key_cols": list(key_cols)}
-            for f in self._write_files(keys, "deletes")
+            {**f, **stamp}
+            for f in self._write_files(
+                deletes, "deletes", staged_keys=staged_keys
+            )
         ]
 
     def _write_delete_and_data(
-        self, keys: DataFrame, key_cols: list[str], data: DataFrame
+        self,
+        deletes: DataFrame | None,
+        key_cols: list[str] | None,
+        data: DataFrame | None,
     ) -> tuple[list[dict], list[dict]]:
-        """Write one commit's equality-delete key files and data files as
-        two CONCURRENT Spark jobs (both independent reads of the same
-        persisted batch; the DAGScheduler shares any common upstream
-        stages/cached blocks between them). An upsert's wall time becomes
-        max(delete write, data write) instead of their sum — the latency
-        term every micro-batch of a streaming CDC sync pays per commit."""
+        """The one writer of a row-level delta (upsert, MERGE, UPDATE):
+        one commit's delete files (equality on ``key_cols``, or position
+        deletes when it is None) and data files, written as two CONCURRENT
+        Spark jobs — both independent reads of the same persisted batch;
+        the DAGScheduler shares any common upstream stages/cached blocks
+        between them. A commit's wall time becomes max(delete write, data
+        write) instead of their sum — the latency term every micro-batch
+        of a streaming CDC sync pays per commit. Both writes pass
+        ``staged_keys``, so ``_distribute`` sizes their files from the
+        data. A None side writes nothing and returns []."""
         from concurrent.futures import ThreadPoolExecutor
 
+        staged_keys = list(key_cols or [])
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_del = pool.submit(self._write_delete_files, keys, key_cols)
-            f_dat = pool.submit(self._write_files, data, "data")
-            return f_del.result(), f_dat.result()
+            f_del = (
+                pool.submit(
+                    self._write_delete_files, deletes, key_cols, staged_keys
+                )
+                if deletes is not None
+                else None
+            )
+            f_dat = (
+                pool.submit(
+                    self._write_files, data, "data", staged_keys=staged_keys
+                )
+                if data is not None
+                else None
+            )
+            return (
+                f_del.result() if f_del else [],
+                f_dat.result() if f_dat else [],
+            )
 
-    def _upsert_per_op(
+    def _rank_ops(
         self,
         df: DataFrame,
         key_cols: list[str],
         op_col: str,
         order_cols: list[str] | None,
-        branch: str,
-        snapshot_props: dict | None,
-        case_insensitive: bool = False,
-        assume_unique: bool = False,
-    ) -> dict:
+    ) -> DataFrame:
         """Per-op CDC apply (cdc-field set, upsert-mode off). Per key, in
         arrival order: an INSERT appends; an UPDATE replaces everything
         earlier (one delete key + the row); a DELETE wipes everything
         earlier. Rows surviving the batch are the last U row (if any U/D op
         is last-ish) plus every INSERT after the final U/D — computed with
         one window pass instead of the reference's sequential per-record
-        apply (BaseDeltaTaskWriter.java:72-84, Operation.java:21-25).
-
-        ``assume_unique``: one row per key already — the arrival-order
-        window degenerates (every row is its key's only row), so skip it:
-        U/D rows contribute their key, non-DELETE rows survive as-is. This
-        is the changelog-mirror path, whose net-per-key collapse guarantees
-        uniqueness (streaming/replicate.py)."""
+        apply (BaseDeltaTaskWriter.java:72-84, Operation.java:21-25): each
+        row gets its arrival ``__rank`` and its key's last U/D rank
+        ``__ud_rank``, from which ``upsert`` picks delete keys and
+        survivors. A batch with one row per key
+        (``upsert(assume_unique=True)``, the changelog-mirror path) skips
+        the window."""
         from pyspark.sql.window import Window
 
         from ..operators.cdc import DELETE, UPDATE
-
-        if assume_unique:
-            with commit_sized_caches(df.sparkSession):
-                batch = df.persist()
-                try:
-                    keys = batch.filter(
-                        F.col(op_col).isin(UPDATE, DELETE)
-                    ).select(*key_cols)
-                    survivors = batch.filter(F.col(op_col) != DELETE)
-                    data = self._project(survivors, case_insensitive)
-                    delete_files, data_files = self._write_delete_and_data(
-                        keys, key_cols, data
-                    )
-                    return self._commit_snapshot(
-                        "overwrite", data_files, delete_files,
-                        snapshot_props or {}, branch,
-                    )
-                finally:
-                    batch.unpersist()
 
         batch = df
         ord_cols = list(order_cols) if order_cols else []
@@ -1100,38 +1132,11 @@ class LakehouseTable:
         )
         w_key = Window.partitionBy(*key_cols)
         is_ud = F.col(op_col).isin(UPDATE, DELETE)
-        with commit_sized_caches(df.sparkSession):
-            batch = (
-                batch.withColumn("__rank", F.row_number().over(w_ord))
-                .withColumn(
-                    "__ud_rank",
-                    F.max(F.when(is_ud, F.col("__rank"))).over(w_key),
-                )
-                .persist()
-            )
-            try:
-                keys = (
-                    batch.filter(F.col("__ud_rank").isNotNull())
-                    .select(*key_cols)
-                    .distinct()
-                )
-                survivors = batch.filter(
-                    (F.col(op_col) != DELETE)
-                    & (
-                        F.col("__ud_rank").isNull()
-                        | (F.col("__rank") >= F.col("__ud_rank"))
-                    )
-                ).drop("__rank", "__ud_rank", "__ord")
-                data = self._project(survivors, case_insensitive)
-                delete_files, data_files = self._write_delete_and_data(
-                    keys, key_cols, data
-                )
-                return self._commit_snapshot(
-                    "overwrite", data_files, delete_files,
-                    snapshot_props or {}, branch,
-                )
-            finally:
-                batch.unpersist()
+        return batch.withColumn(
+            "__rank", F.row_number().over(w_ord)
+        ).withColumn(
+            "__ud_rank", F.max(F.when(is_ud, F.col("__rank"))).over(w_key)
+        )
 
     def merge(
         self,
@@ -1217,35 +1222,30 @@ class LakehouseTable:
                     assume_unique=True,
                 )
             others = [c for c in src.columns if c not in on]
-            with commit_sized_caches(spark):
-                grouped = src.groupBy(*on).agg(
-                    F.count(F.lit(1)).alias("__n"),
-                    *[F.first(c).alias(c) for c in others],
-                ).persist()
-                try:
-                    if (
-                        grouped.filter(F.col("__n") > 1).limit(1).count() > 0
-                    ):
-                        _raise_dup()
-                    return self.upsert(
-                        grouped.drop("__n"),
-                        on,
-                        branch=branch,
-                        snapshot_props=snapshot_props,
-                        assume_unique=True,
-                    )
-                finally:
-                    grouped.unpersist()
+            grouped = src.groupBy(*on).agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[F.first(c).alias(c) for c in others],
+            ).persist()
+            try:
+                if grouped.filter(F.col("__n") > 1).limit(1).count() > 0:
+                    _raise_dup()
+                return self.upsert(
+                    grouped.drop("__n"),
+                    on,
+                    branch=branch,
+                    snapshot_props=snapshot_props,
+                    assume_unique=True,
+                )
+            finally:
+                grouped.unpersist()
         tgt_keys = (
             self.read(spark, branch=branch)
             .select(*on)
             .distinct()
             .withColumn("__matched", F.lit(True))
         )
-        with contextlib.ExitStack() as _stack:
-            _stack.enter_context(commit_sized_caches(spark))
-            marked = src.join(tgt_keys, on=on, how="left").persist()
-            _stack.callback(marked.unpersist)
+        marked = src.join(tgt_keys, on=on, how="left").persist()
+        try:
             if not assume_unique and (
                 marked.groupBy(*on)
                 .count()
@@ -1256,7 +1256,7 @@ class LakehouseTable:
             ):
                 _raise_dup()
             matched = marked.filter(F.col("__matched").isNotNull() & cond)
-            delete_files: list[dict] = []
+            keys = None
             appends = None
             # skip delete files when nothing matched: an insert-only outcome
             # must commit as a plain append (no phantom delete file, no
@@ -1264,7 +1264,6 @@ class LakehouseTable:
             # LIMIT 1 over the persisted marked batch.
             if when_matched in ("update", "delete") and not matched.isEmpty():
                 keys = matched.select(*on)
-                delete_files = self._write_delete_files(keys, on)
             if when_matched == "update":
                 appends = matched.drop("__matched")
             if when_not_matched == "insert":
@@ -1285,8 +1284,13 @@ class LakehouseTable:
                     src.select(*on).distinct(), on=on, how="left_anti"
                 ).select(*[f.name for f in self.schema().fields])
                 if not orphan.isEmpty():
-                    delete_files += self._write_delete_files(
-                        orphan.select(*on).distinct(), on
+                    # orphan keys never match a source key, so they join
+                    # the matched keys in the one equality-delete file set
+                    orphan_keys = orphan.select(*on).distinct()
+                    keys = (
+                        orphan_keys
+                        if keys is None
+                        else keys.unionByName(orphan_keys)
                     )
                     if when_not_matched_by_source == "update":
                         upd = orphan
@@ -1301,10 +1305,10 @@ class LakehouseTable:
                             if appends is None
                             else appends.unionByName(upd)
                         )
-            data_files = (
-                self._write_files(self._project(appends), "data")
-                if appends is not None
-                else []
+            delete_files, data_files = self._write_delete_and_data(
+                keys,
+                on,
+                self._project(appends) if appends is not None else None,
             )
             if not data_files and not delete_files:
                 raise ValueError("MERGE with no active clause")
@@ -1318,6 +1322,8 @@ class LakehouseTable:
                 snapshot_props or {},
                 branch,
             )
+        finally:
+            marked.unpersist()
 
     def delete_where(
         self,
@@ -1347,31 +1353,36 @@ class LakehouseTable:
             .select(*key_cols)
             .distinct()
         )
-        if self.file_format() != "parquet":
-            # avro delete files carry no cheap row count — keep the
-            # check-then-write shape there
+        return self._commit_deletes(matched, key_cols, branch, snapshot_props)
+
+    def _commit_deletes(
+        self,
+        matched: DataFrame,
+        key_cols: list[str] | None,
+        branch: str,
+        snapshot_props: dict | None,
+    ) -> dict | None:
+        """Commit the delete files of a row-level DELETE (``key_cols`` as
+        in ``_write_delete_files``); None, committing nothing, when
+        ``matched`` is empty. Parquet writes first and reads the row count
+        off the written footers: an isEmpty guard would evaluate the pruned
+        merge-on-read scan a second time. Other formats carry no cheap row
+        count and keep the check-then-write shape."""
+        if self.file_format() == "parquet":
+            files = self._write_delete_files(matched, key_cols)
+            if self._written_rows(files) == 0:
+                self._discard_written(files)
+                return None
+        else:
             matched = matched.persist()
             try:
                 if matched.isEmpty():
                     return None
-                delete_files = self._write_delete_files(matched, key_cols)
-                return self._commit_snapshot(
-                    "overwrite", [], delete_files, snapshot_props or {}, branch
-                )
+                files = self._write_delete_files(matched, key_cols)
             finally:
                 matched.unpersist()
-        # write-first: the empty guard used to cost a FULL extra job
-        # (isEmpty evaluates the pruned merge-on-read scan once, the
-        # write evaluates it again). Writing directly and reading the
-        # row count off the written parquet footers makes the common
-        # non-empty case one job; the rare no-match case discards an
-        # empty uuid dir and still returns None (no snapshot).
-        delete_files = self._write_delete_files(matched, key_cols)
-        if self._written_rows(delete_files) == 0:
-            self._discard_written(delete_files)
-            return None
         return self._commit_snapshot(
-            "overwrite", [], delete_files, snapshot_props or {}, branch
+            "overwrite", [], files, snapshot_props or {}, branch
         )
 
     def delete_where_positions(
@@ -1404,54 +1415,45 @@ class LakehouseTable:
         and consumers fall back to a full diff (streaming/mv.py does this
         automatically).
         """
-        meta = self.metadata()
-        snap = self.current_snapshot(branch)
-        if snap is None:
+        matched = self._matched_rows_with_positions(spark, where, branch)
+        if matched is None:
             return None
-        data_files, delete_files = self._live_files(meta, snap)
+        return self._commit_deletes(
+            self._positions(matched), None, branch, snapshot_props
+        )
+
+    def _matched_rows_with_positions(
+        self, spark: SparkSession, where: str, branch: str
+    ) -> DataFrame | None:
+        """The live rows of ``branch`` that ``where`` matches, read with
+        their physical identity (``__fp``, ``__pos``) from only the files
+        whose recorded bounds and bucket partitions may match; None when
+        no file may. Existing deletes apply first, so already-dead rows
+        are never marked again."""
+        meta = self.metadata()
+        sid = meta["refs"].get(branch)
+        if sid is None:
+            return None
+        data_files, delete_files = self._live_files(
+            meta, self._snapshot_by_id(meta, sid)
+        )
         data_files = self._prune_bucket_partitions(
             [f for f in data_files if file_may_match(f, where)], where
         )
         if not data_files:
             return None
-        target = self.read_schema()
         rows = self._read_file_group(
-            spark, data_files, target, with_position=True
+            spark, data_files, self.read_schema(), with_position=True
         )
-        # apply EXISTING deletes first so already-dead rows don't bloat the
-        # delete file (harmless but wasteful to re-mark them)
-        rows = self._apply_deletes(spark, rows, delete_files)
+        return self._apply_deletes(spark, rows, delete_files).filter(where)
+
+    def _positions(self, rows: DataFrame) -> DataFrame:
+        """Position-delete rows (``file_path`` relative to the table root,
+        ``pos``) for rows read with their physical identity."""
         prefix = os.path.abspath(self.root) + "/"
-        matched = rows.filter(where).select(
+        return rows.select(
             _fp_store(F.col("__fp"), prefix).alias("file_path"),
             F.col("__pos").alias("pos"),
-        )
-        if self.file_format() != "parquet":
-            matched = matched.persist()
-            try:
-                if matched.isEmpty():
-                    return None
-                files = [
-                    {**f, "delete_type": "position"}
-                    for f in self._write_files(matched, "deletes")
-                ]
-                return self._commit_snapshot(
-                    "overwrite", [], files, snapshot_props or {}, branch
-                )
-            finally:
-                matched.unpersist()
-        # write-first (see delete_where): the written parquet footers
-        # carry the row count, so the pre-write isEmpty job is pure
-        # overhead in the common non-empty case
-        files = [
-            {**f, "delete_type": "position"}
-            for f in self._write_files(matched, "deletes")
-        ]
-        if self._written_rows(files) == 0:
-            self._discard_written(files)
-            return None
-        return self._commit_snapshot(
-            "overwrite", [], files, snapshot_props or {}, branch
         )
 
     def update_where(
@@ -1476,39 +1478,35 @@ class LakehouseTable:
         unknown = set(assignments) - {f.name for f in self.read_schema().fields}
         if unknown:
             raise ValueError(f"UPDATE of unknown columns: {sorted(unknown)}")
-        with commit_sized_caches(spark):
-            matched = self.read(spark, branch=branch, where=where).persist()
-            try:
-                keys = matched.select(*key_cols).distinct()
-                updated = matched.withColumns(
-                    {c: F.expr(e) for c, e in assignments.items()}
-                )
-                # write-first (see delete_where): the two concurrent writes
-                # materialize the persisted scan once; the no-match case is
-                # detected from the written footers instead of a prior
-                # isEmpty job, discards the empty dirs, and still commits
-                # nothing. Non-parquet formats keep the pre-write check.
-                if self.file_format() != "parquet":
-                    if matched.isEmpty():
-                        return None
-                delete_files, data_files = self._write_delete_and_data(
-                    keys, key_cols, self._project(updated)
-                )
-                if (
-                    self.file_format() == "parquet"
-                    and self._written_rows(delete_files) == 0
-                ):
-                    self._discard_written(delete_files + data_files)
-                    return None
-                return self._commit_snapshot(
-                    "overwrite",
-                    data_files,
-                    delete_files,
-                    snapshot_props or {},
-                    branch,
-                )
-            finally:
-                matched.unpersist()
+        parquet = self.file_format() == "parquet"
+        matched = self.read(spark, branch=branch, where=where).persist()
+        try:
+            keys = matched.select(*key_cols).distinct()
+            updated = matched.withColumns(
+                {c: F.expr(e) for c, e in assignments.items()}
+            )
+            # write-first (see _commit_deletes): the two concurrent writes
+            # materialize the persisted scan once; the no-match case is
+            # detected from the written footers instead of a prior
+            # isEmpty job, discards the empty dirs, and still commits
+            # nothing. Non-parquet formats keep the pre-write check.
+            if not parquet and matched.isEmpty():
+                return None
+            delete_files, data_files = self._write_delete_and_data(
+                keys, key_cols, self._project(updated)
+            )
+            if parquet and self._written_rows(delete_files) == 0:
+                self._discard_written(delete_files + data_files)
+                return None
+            return self._commit_snapshot(
+                "overwrite",
+                data_files,
+                delete_files,
+                snapshot_props or {},
+                branch,
+            )
+        finally:
+            matched.unpersist()
 
     def update_where_positions(
         self,
@@ -1527,43 +1525,24 @@ class LakehouseTable:
         unknown = set(assignments) - {f.name for f in self.read_schema().fields}
         if unknown:
             raise ValueError(f"UPDATE of unknown columns: {sorted(unknown)}")
-        meta = self.metadata()
-        snap = self.current_snapshot(branch)
-        if snap is None:
+        matched = self._matched_rows_with_positions(spark, where, branch)
+        if matched is None:
             return None
-        data_files, delete_files = self._live_files(meta, snap)
-        data_files = self._prune_bucket_partitions(
-            [f for f in data_files if file_may_match(f, where)], where
-        )
-        if not data_files:
-            return None
-        rows = self._read_file_group(
-            spark, data_files, self.read_schema(), with_position=True
-        )
-        rows = self._apply_deletes(spark, rows, delete_files)
-        prefix = os.path.abspath(self.root) + "/"
-        with commit_sized_caches(spark):
-            matched = rows.filter(where).persist()
-            try:
-                if matched.isEmpty():
-                    return None
-                positions = matched.select(
-                    _fp_store(F.col("__fp"), prefix).alias("file_path"),
-                    F.col("__pos").alias("pos"),
-                )
-                dfiles = [
-                    {**f, "delete_type": "position"}
-                    for f in self._write_files(positions, "deletes")
-                ]
-                updated = matched.drop("__fp", "__pos", "__seq").withColumns(
-                    {c: F.expr(e) for c, e in assignments.items()}
-                )
-                data = self._write_files(self._project(updated), "data")
-                return self._commit_snapshot(
-                    "overwrite", data, dfiles, snapshot_props or {}, branch
-                )
-            finally:
-                matched.unpersist()
+        matched = matched.persist()
+        try:
+            if matched.isEmpty():
+                return None
+            updated = matched.drop("__fp", "__pos", "__seq").withColumns(
+                {c: F.expr(e) for c, e in assignments.items()}
+            )
+            dfiles, data = self._write_delete_and_data(
+                self._positions(matched), None, self._project(updated)
+            )
+            return self._commit_snapshot(
+                "overwrite", data, dfiles, snapshot_props or {}, branch
+            )
+        finally:
+            matched.unpersist()
 
     def evolve_schema(self, incoming: T.StructType) -> bool:
         """§1.3 #3: add missing columns (including nested struct fields,
@@ -2041,11 +2020,14 @@ class LakehouseTable:
         if action == "drop":
             # a live equality-delete file keyed on the column makes every
             # merge-on-read scan anti-join on it; dropping would brick reads
-            for ref in meta.get("refs", {}):
-                snap = self.current_snapshot(ref)
-                if snap is None:
+            # checked against the attempt's own ``meta`` — the head it
+            # commits onto, not whatever head is current by now
+            for ref, sid in meta.get("refs", {}).items():
+                if sid is None:
                     continue
-                _, delete_files = self._live_files(meta, snap)
+                _, delete_files = self._live_files(
+                    meta, self._snapshot_by_id(meta, sid)
+                )
                 for f in delete_files:
                     if col in (f.get("key_cols") or []):
                         raise ValueError(
@@ -4198,8 +4180,10 @@ class LakehouseTable:
         deletes FOLDED IN and land at the top sequence; delete files stay
         in the manifest and keep applying to the kept (lower-sequence)
         files. ``sort_by`` range-clusters the rewritten rows so their new
-        bounds are disjoint. Returns the snapshot, or None when no file
-        matches."""
+        bounds are disjoint — on tables without a write policy of their
+        own: ``_write_files`` passes it to ``_distribute``, where a set
+        ``write.distribution-mode`` or ``write.sort-order`` wins. Returns
+        the snapshot, or None when no file matches."""
         meta = self.metadata()
         snap = self.current_snapshot(branch)
         if snap is None:
@@ -4219,20 +4203,7 @@ class LakehouseTable:
         merged = self._apply_deletes(spark, merged, delete_files).drop(
             "__seq", "__fp", "__pos"
         )
-        # table-level write policy wins: when write.distribution-mode or
-        # write.sort-order is set, _write_files re-clusters the rows itself
-        # and a repartitionByRange here would be silently destroyed — apply
-        # the ad-hoc sort_by only on tables with no policy of their own
-        props = self.properties()
-        table_clusters = (
-            props.get("write.distribution-mode", "none").lower() != "none"
-            or bool(props.get("write.sort-order"))
-        )
-        if sort_by and not table_clusters:
-            merged = merged.repartitionByRange(*sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        new_files = self._write_files(merged, "data")
+        new_files = self._write_files(merged, "data", sort_by=sort_by)
         return self._commit_snapshot(
             "replace",
             kept + new_files,

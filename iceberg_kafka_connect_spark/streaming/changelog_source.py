@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import DELETE, INSERT
-from ..sinks.table import MAIN, commit_sized_caches
+from ..sinks.table import MAIN
+from .replicate import apply_changes
 
 _MARKER = "changelog.src-snapshot-id"
 
@@ -202,39 +203,22 @@ class ChangelogStream:
             # evolve the sink schema with _row_id columns and break a
             # later read_with_lineage on a v3 destination (duplicate
             # field against LINEAGE_FIELDS)
-            with commit_sized_caches(spark):
-                net = (
-                    ch.drop(
-                        "_change_snapshot_id",
-                        "_change_ordinal",
-                        "_row_id",
-                        "_last_updated_sequence_number",
-                    )
-                    .withColumn(
-                        "__op",
-                        F.when(
-                            F.col("_change_type") == "delete", F.lit(DELETE)
-                        ).otherwise(F.lit(INSERT)),
-                    )
-                    .drop("_change_type")
-                    .persist()
+            net = (
+                ch.drop(
+                    "_change_snapshot_id",
+                    "_change_ordinal",
+                    "_row_id",
+                    "_last_updated_sequence_number",
                 )
-                try:
-                    if net.isEmpty():
-                        dst._commit_snapshot(
-                            "append", [], [], {_MARKER: sid}, MAIN
-                        )
-                    else:
-                        dst.upsert(
-                            net,
-                            key_cols=key_cols,
-                            op_col="__op",
-                            upsert_mode=False,
-                            snapshot_props={_MARKER: sid},
-                            assume_unique=True,
-                        )
-                finally:
-                    net.unpersist()
+                .withColumn(
+                    "__op",
+                    F.when(
+                        F.col("_change_type") == "delete", F.lit(DELETE)
+                    ).otherwise(F.lit(INSERT)),
+                )
+                .drop("_change_type")
+            )
+            apply_changes(dst, net, key_cols, {_MARKER: sid}, MAIN)
             self._commit_offset(sid)
             prev = sid
             applied += 1
@@ -436,27 +420,19 @@ def reconcile(
     missing = src_state.exceptAll(dst_state).withColumn(
         "__op", F.lit(INSERT)
     )
-    with commit_sized_caches(spark):
-        delta = stale.unionByName(missing).persist()
-        try:
-            n_del = delta.filter(F.col("__op") == DELETE).count()
-            n_ins = delta.filter(F.col("__op") == INSERT).count()
+    delta = stale.unionByName(missing).persist()
+    try:
+        n_del = delta.filter(F.col("__op") == DELETE).count()
+        n_ins = delta.filter(F.col("__op") == INSERT).count()
+        # states that already agree still stamp the marker, so
+        # incremental resume starts from the verified head
+        if n_del or n_ins or head is not None:
             props = {_MARKER: head} if head is not None else {}
-            if n_del or n_ins:
-                dst.upsert(
-                    delta,
-                    key_cols=key_cols,
-                    op_col="__op",
-                    upsert_mode=False,
-                    snapshot_props=props,
-                    assume_unique=True,
-                )
-            elif head is not None:
-                # states already agree: still stamp the marker so
-                # incremental resume starts from the verified head
-                dst._commit_snapshot("append", [], [], props, MAIN)
-        finally:
-            delta.unpersist()
+            apply_changes(
+                dst, delta, key_cols, props, MAIN, not (n_del or n_ins)
+            )
+    finally:
+        delta.unpersist()
     if head is not None:
         stream._commit_offset(head)
     return {"deletes": n_del, "inserts": n_ins, "src_snapshot_id": head}

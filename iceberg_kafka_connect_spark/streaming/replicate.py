@@ -20,12 +20,11 @@ equality-delete upsert to the replica — never a full scan of either table.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.cdc import DELETE, UPDATE
-from ..sinks.table import commit_sized_caches
 
 _MARKER = "mirror.src-snapshot-id"
 
@@ -58,41 +57,55 @@ def mirror_changes(
         F.col("_change_ordinal").desc(),
         (F.col("_change_type") == "insert").desc(),
     )
-    with commit_sized_caches(spark):
-        net = (
-            ch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "_change_snapshot_id", "_change_ordinal")
-            .withColumn(
-                "__op",
-                F.when(
-                    F.col("_change_type") == "delete", F.lit(DELETE)
-                ).otherwise(F.lit(UPDATE)),
-            )
-            .drop("_change_type")
-            # the upsert consumes this twice (delete keys + inserts) on top
-            # of the emptiness probe — persist so the changelog scan runs
-            # once
-            .persist()
+    net = (
+        ch.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "_change_snapshot_id", "_change_ordinal")
+        .withColumn(
+            "__op",
+            F.when(
+                F.col("_change_type") == "delete", F.lit(DELETE)
+            ).otherwise(F.lit(UPDATE)),
         )
+        .drop("_change_type")
+    )
+    # the row_number collapse above guarantees one row per key
+    return apply_changes(dst, net, key_cols, {_MARKER: head}, branch)
+
+
+def apply_changes(
+    dst,
+    changes: DataFrame,
+    key_cols: list[str],
+    props: dict,
+    branch: str,
+    empty: bool | None = None,
+) -> dict:
+    """Apply a per-op change frame to ``dst`` as ONE commit carrying
+    ``props``: the per-op upsert without its arrival-order window, so
+    UPDATE and DELETE rows delete their key and every non-DELETE row is
+    appended. A change-less frame (e.g. empty appends moved the source
+    head) still commits an empty append, so the marker in ``props``
+    advances and the next poll does not re-read the stale range —
+    O(new files) stays true. A caller that already persisted ``changes``
+    and counted its rows passes ``empty``; no second persist or probe."""
+    if empty is None:
+        # the upsert consumes this twice (delete keys + inserts) on top of
+        # the emptiness probe — persist so the change scan runs once
+        changes = changes.persist()
         try:
-            if net.isEmpty():
-                # row-less range (e.g. empty appends moved the head):
-                # advance the marker with an empty append so the next poll
-                # doesn't re-read the whole stale range — O(new files)
-                # stays true
-                return dst._commit_snapshot(
-                    "append", [], [], {_MARKER: head}, branch
-                )
-            return dst.upsert(
-                net,
-                key_cols=key_cols,
-                op_col="__op",
-                upsert_mode=False,
-                snapshot_props={_MARKER: head},
-                # the row_number collapse above guarantees one row per key —
-                # skip the per-op arrival-order window entirely
-                assume_unique=True,
+            return apply_changes(
+                dst, changes, key_cols, props, branch, changes.isEmpty()
             )
         finally:
-            net.unpersist()
+            changes.unpersist()
+    if empty:
+        return dst._commit_snapshot("append", [], [], props, branch)
+    return dst.upsert(
+        changes,
+        key_cols=key_cols,
+        op_col="__op",
+        upsert_mode=False,
+        snapshot_props=props,
+        assume_unique=True,
+    )

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from . import register
 from ..functions import local_df
+from ..session import few_state_partitions
 from .core import davg, dim, dsum, sql_davg, sql_dsum, table
 
 
@@ -772,7 +773,7 @@ def funnel_stream_replay(spark, sf_dir):
         for r in batch.collect():
             depths[r.user_id] = r.depth
 
-    with _few_state_partitions(spark):
+    with few_state_partitions(spark):
         for i, sl in enumerate(slices):
             # chronological arrival: each run sees exactly one new slice and
             # resumes the per-user step state from the shared checkpoint
@@ -803,26 +804,6 @@ def funnel_stream_replay(spark, sf_dir):
     return out.groupBy("depth").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users")
     )
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _few_state_partitions(spark, n=8):
-    """Bounded-size replay gates don't need 32 state partitions — the
-    state store pays per-partition-per-microbatch task overhead, which
-    dominates at gate scale. The stream's checkpoint pins the partition
-    count at FIRST run, so setting it for the whole gate keeps every
-    run consistent; the finally restores the session default even when
-    a run times out or errors."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 # --------------------------------------------------------------------------
@@ -875,7 +856,7 @@ def stream_interval_join_replay(spark, sf_dir):
         acc[0] += r[0] or 0
         acc[1] += r[1] or 0
 
-    with _few_state_partitions(spark):
+    with few_state_partitions(spark):
         for sl in (
             e.filter(F.col("timestamp") < F.lit(cut)),
             e.filter(F.col("timestamp") >= F.lit(cut)),
@@ -989,7 +970,7 @@ def session_stream_replay(spark, sf_dir):
     sentinel = local_df(spark, 
         [(-1, hi + dt.timedelta(hours=2))], "user_id long, timestamp timestamp"
     )
-    with _few_state_partitions(spark):
+    with few_state_partitions(spark):
         for sl in (
             e.filter(F.col("timestamp") < F.lit(cut)),
             e.filter(F.col("timestamp") >= F.lit(cut)),
@@ -1081,7 +1062,7 @@ def dedup_stream_replay(spark, sf_dir):
         acc[0] += r[0] or 0
         acc[1] += r[1] or 0
 
-    with _few_state_partitions(spark):
+    with few_state_partitions(spark):
         for sl in (first, redelivered):
             sl.coalesce(1).write.mode("append").parquet(src)
             stream = spark.readStream.schema(

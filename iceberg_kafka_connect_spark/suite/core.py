@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet_nanos_as_long
+
 TABLES = (
     "region",
     "nation",
@@ -97,7 +99,7 @@ def table(
     columns and its single global agg has no reduce side to parallelize)."""
     path = f"{sf_dir}/{name}.parquet"
     if name in NANOS_COLS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        read_parquet_nanos_as_long(spark)
         df = spark.read.parquet(path)
         for c in NANOS_COLS[name]:
             if dict(df.dtypes).get(c) == "bigint":

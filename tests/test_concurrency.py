@@ -119,71 +119,3 @@ def test_concurrent_append_during_rewrite_detected(spark, tmp_path):
     # and a re-planned compaction now succeeds
     t.compact(spark)
     assert sorted(r.id for r in t.read(spark).collect()) == [1, 2, 99]
-
-
-def test_commit_sized_caches_overlapping_threads(spark):
-    """Two commits on one session overlap: the first to leave must not
-    revert the flag under the second, and the last to leave restores the
-    value found before the first entered (an unset conf stays unset)."""
-    from iceberg_kafka_connect_spark.sinks.table import commit_sized_caches
-
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    spark.conf.unset(key)
-    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
-    seen = {}
-
-    def first():
-        with commit_sized_caches(spark):
-            a_in.set()
-            b_in.wait(10)
-        a_out.set()
-
-    def second():
-        a_in.wait(10)
-        with commit_sized_caches(spark):
-            b_in.set()
-            a_out.wait(10)
-            seen["after_first_left"] = spark.conf.get(key)
-
-    threads = [threading.Thread(target=f) for f in (first, second)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join(timeout=60)
-        assert not th.is_alive()
-    assert seen["after_first_left"] == "true"
-    assert spark.conf.get(key, None) is None
-
-
-def test_commit_sized_caches_stress(spark):
-    """More threads than cores entering and leaving the scope with a
-    short switch interval: inside it the flag always reads on, and the
-    last one out leaves the conf unset again."""
-    import sys
-
-    from iceberg_kafka_connect_spark.sinks.table import commit_sized_caches
-
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    spark.conf.unset(key)
-    off_inside, done = [], []
-
-    def worker():
-        for _ in range(20):
-            with commit_sized_caches(spark):
-                if spark.conf.get(key) != "true":
-                    off_inside.append(1)
-        done.append(1)
-
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-5)
-    try:
-        threads = [threading.Thread(target=worker) for _ in range(8)]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join(timeout=120)
-    finally:
-        sys.setswitchinterval(interval)
-    assert len(done) == 8
-    assert not off_inside
-    assert spark.conf.get(key, None) is None

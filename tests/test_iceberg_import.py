@@ -512,6 +512,31 @@ def test_external_fixture_imports(spark, tmp_path, external_tree):
     assert imp.identifier_fields() == ["k"]
 
 
+def test_import_commits_each_snapshot_in_one_version(tmp_path, external_tree):
+    """The fixture's snapshot carries entries at sequence numbers 1 and 2
+    on a fresh table (native counter 1). It must land in ONE metadata
+    version already at or above its highest entry sequence number — never
+    a version whose head sits below its own entries, raised by a second."""
+    imp = import_iceberg_table(str(external_tree), str(tmp_path / "dst"))
+    snaps_by_version = []
+    for v in range(imp.current_version() + 1):
+        with open(imp._version_path(v)) as f:
+            meta = json.load(f)
+        snaps_by_version.append(
+            {s["snapshot_id"]: s["sequence_number"] for s in meta["snapshots"]}
+        )
+    changed = [
+        (prev, cur)
+        for prev, cur in zip(snaps_by_version, snaps_by_version[1:])
+        if cur != prev
+    ]
+    assert len(changed) == len(imp.snapshots()) == 1
+    (prev, cur), = changed
+    (sid, seq), = (kv for kv in cur.items() if kv[0] not in prev)
+    data, deletes = imp._load_manifest(imp._snapshot_by_id(imp.metadata(), sid))
+    assert seq == max(e["seq"] for e in data + deletes) == 2
+
+
 def test_external_fixture_bounds_prune(spark, tmp_path, external_tree):
     imp = import_iceberg_table(str(external_tree), str(tmp_path / "dst"))
     kept, total = imp.scan_files("k >= 10")

@@ -322,3 +322,30 @@ def test_lost_commit_leaves_metadata_unchanged(
     assert isinstance(lost, CommitConflict)
     assert calls == COMMIT_RETRIES
     assert sorted(os.listdir(meta_dir)) == before
+
+
+def test_drop_column_guard_reads_only_the_attempt_metadata(
+    spark, tmp_path, monkeypatch
+):
+    """The drop guard checks the equality deletes live on every branch
+    head of the metadata the attempt commits, loading no head of its own:
+    one ``metadata()`` call per attempt on a table with a branch and a
+    tag, and a refusal for a column only the branch's deletes key on."""
+    t = LakehouseTable.create(str(tmp_path / "t"), SCHEMA)
+    t.append(_df(spark, 0, 4))
+    t.create_branch("b")
+    t.create_tag("t0")
+    t.upsert(_df(spark, 2, 3), key_cols=["v"], branch="b")
+    loads = []
+    orig = LakehouseTable.metadata
+
+    def counting(self):
+        loads.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(LakehouseTable, "metadata", counting)
+    t.drop_column("p")
+    assert len(loads) == 1
+    with pytest.raises(ValueError, match="branch 'b'"):
+        t.drop_column("v")
+    assert len(loads) == 2

@@ -697,6 +697,76 @@ def test_external_writer_commits_snapshot(spark, server, client):
     } == set(range(5)) | {1000, 1001, 1002}
 
 
+@pytest.mark.parametrize("live", ["carried", "none"])
+def test_external_writer_commits_snapshot_adding_no_files(
+    spark, server, client, live
+):
+    """An add-snapshot onto the existing main head that adds no file
+    commits with a 200 and one new version: an empty append whose
+    manifest list only carries the parent's manifests, and a snapshot
+    whose manifest list has no live file at all."""
+    import os
+    import time as _time
+    import uuid as _uuid
+
+    from iceberg_kafka_connect_spark.sinks.iceberg_export import (
+        _manifest_list_schema,
+        _read_ocf,
+        _write_ocf,
+    )
+
+    t = client.create_table("db.e", SCHEMA)
+    t.append(spark.createDataFrame(_rows(5), SCHEMA))
+    _, meta = client.load_table_metadata("db.e")
+    head = meta["current-snapshot-id"]
+    carried = []
+    if live == "carried":
+        parent_snap = next(
+            s for s in meta["snapshots"] if s["snapshot-id"] == head
+        )
+        _, _, carried = _read_ocf(
+            parent_snap["manifest-list"].removeprefix("file://")
+        )
+    meta_dir = os.path.join(meta["location"].removeprefix("file://"), "metadata")
+    new_sid = 9_900_000_101
+    mlpath = os.path.join(
+        meta_dir, f"snap-{new_sid}-1-{_uuid.uuid4().hex}.avro"
+    )
+    _write_ocf(mlpath, _manifest_list_schema(), carried, {})
+    snap = {
+        "snapshot-id": new_sid,
+        "parent-snapshot-id": head,
+        "sequence-number": meta.get("last-sequence-number", 0) + 1,
+        "timestamp-ms": int(_time.time() * 1000),
+        "manifest-list": "file://" + mlpath,
+        "summary": {"operation": "append" if live == "carried" else "delete"},
+        "schema-id": 0,
+    }
+    version = server.catalog.load_table("db.e").metadata()["version"]
+    client._commit(
+        "db.e",
+        updates=[
+            {"action": "add-snapshot", "snapshot": snap},
+            {
+                "action": "set-snapshot-ref",
+                "ref-name": "main",
+                "type": "branch",
+                "snapshot-id": new_sid,
+            },
+        ],
+        requirements=[
+            {"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": head}
+        ],
+        retries=1,
+    )
+    table = server.catalog.load_table("db.e")
+    assert table.metadata()["version"] == version + 1
+    _, meta2 = client.load_table_metadata("db.e")
+    assert meta2["current-snapshot-id"] == new_sid
+    got = {r.id for r in table.read(spark).collect()}
+    assert got == (set(range(5)) if live == "carried" else set())
+
+
 def test_external_writer_stages_then_publishes(spark, server, client):
     """add-snapshot WITHOUT a ref update stages the snapshot (WAP shape);
     a later commit's set-snapshot-ref publishes it and retires the hidden
