@@ -12,7 +12,13 @@ existing connector config ports over as-is.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
+
+
+def default_commit_threads() -> int:
+    """``iceberg.control.commit.threads`` default: 2 × available cores."""
+    return 2 * (os.cpu_count() or 1)
 
 
 @dataclass
@@ -39,7 +45,10 @@ class SinkConfig:
     evolve_schema: bool = False
     schema_case_insensitive: bool = False
     commit_interval_ms: int = 300_000  # IcebergSinkConfig.java:88-89
-    commit_threads: int = 1  # T8 parallel per-table commit (Coordinator.java:89)
+    # T8 parallel per-table commit (Coordinator.java:89): one pool thread
+    # per routed table up to this many; the reference defaults to 2 × cores
+    # (IcebergSinkConfig.java:92,228-233)
+    commit_threads: int = field(default_factory=default_commit_threads)
     auto_create_partition_by: list[str] = field(default_factory=list)
     # Kafka Connect error-handling surface (errors.tolerance /
     # errors.deadletterqueue.topic.name): malformed records either fail the
@@ -144,7 +153,9 @@ def from_properties(props: dict[str, str]) -> SinkConfig:
         commit_interval_ms=int(
             props.get("iceberg.control.commit.interval-ms", "300000")
         ),
-        commit_threads=int(props.get("iceberg.control.commit.threads", "1")),
+        commit_threads=int(
+            props.get("iceberg.control.commit.threads", default_commit_threads())
+        ),
         errors_tolerance=props.get("errors.tolerance", "none"),
         dlq_table=props.get("errors.deadletterqueue.topic.name"),
         default_commit_branch=props.get(

@@ -163,3 +163,20 @@ def few_state_partitions(spark: SparkSession, n: int = 8):
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def caller_job_group_target(spark: SparkSession, fn):
+    """``fn`` wrapped for a pool thread so the Spark jobs it launches run
+    under the calling thread's job group, description and scheduler pool.
+    In pinned-thread mode (PySpark's default) each Python thread drives a
+    JVM thread of its own that does not inherit those local properties,
+    so ``cancelJobGroup`` and the status tracker would miss the jobs.
+    Wrap once per task, in the calling thread: each wrap copies the
+    properties once, and the thread installs that copy itself, so tasks
+    sharing one wrap would share (and overwrite) one set of properties —
+    the SQL execution id and job tags each action sets among them."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    # without pinned threads the wrapper is a no-op that hands back its arg
+    return fn if wrap is spark else wrap(fn)

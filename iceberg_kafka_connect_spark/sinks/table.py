@@ -32,6 +32,7 @@ data files to bound read amplification, exactly like Iceberg maintenance.
 
 from __future__ import annotations
 
+import contextlib
 import glob as globmod
 import json
 import logging
@@ -53,6 +54,7 @@ from .stats import collect_parquet_stats, file_may_match, split_conjuncts
 COMMIT_RETRIES = 3  # IcebergSinkConfig.java:103-104 (schema/create retries)
 COMMIT_BACKOFF_S = 0.05  # the n-th lost CAS backs off n × this
 MAIN = "main"
+VERSION_HINT = "version-hint.text"  # metadata/ pointer to the head version
 
 def _distribute(
     df: DataFrame,
@@ -305,14 +307,33 @@ class LakehouseTable:
         t._write_version(0, meta)
         return t
 
-    def identifier_fields(self) -> list[str]:
-        return self.metadata().get("identifier_fields", [])
+    def identifier_fields(self, meta: dict | None = None) -> list[str]:
+        meta = self.metadata() if meta is None else meta
+        return meta.get("identifier_fields", [])
 
     @staticmethod
     def exists(root: str) -> bool:
-        return bool(globmod.glob(os.path.join(root, "metadata", "v*.json")))
+        meta_dir = os.path.join(root, "metadata")
+        return os.path.isfile(os.path.join(meta_dir, VERSION_HINT)) or bool(
+            globmod.glob(os.path.join(meta_dir, "v*.json"))
+        )
 
     def current_version(self) -> int:
+        """The head version in O(1) file operations: read the
+        ``version-hint.text`` pointer (Iceberg's hadoop-table head), check
+        its version file exists and probe upward past versions linked since
+        the hint was written (a writer that lost the race to replace the
+        hint, or one that predates it). A missing, garbled or dangling hint
+        falls back to listing ``metadata/``."""
+        try:
+            with open(os.path.join(self._meta_dir, VERSION_HINT)) as f:
+                v = int(f.read())
+        except (OSError, ValueError):
+            v = None
+        if v is not None and os.path.exists(self._version_path(v)):
+            while os.path.exists(self._version_path(v + 1)):
+                v += 1
+            return v
         versions = [
             int(os.path.basename(p)[1:-5])
             for p in globmod.glob(os.path.join(self._meta_dir, "v*.json"))
@@ -326,17 +347,31 @@ class LakehouseTable:
             return json.load(f)
 
     def _write_version(self, v: int, meta: dict) -> None:
-        """Atomic, conflict-detecting commit: hard-link fails if vN exists."""
+        """Atomic, conflict-detecting commit: hard-link fails if vN exists.
+        The version hint is replaced after the link; it only speeds up
+        finding the head, so a hint left behind by a slower writer costs
+        readers one probe, never a wrong answer, and failing to write it
+        does not fail the (already durable) commit."""
         meta["version"] = v
         tmp = os.path.join(self._meta_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
-            json.dump(meta, f)
+            f.write(json.dumps(meta))
         try:
             os.link(tmp, self._version_path(v))
         except FileExistsError as e:
             raise CommitConflict(f"version {v} already committed") from e
         finally:
             os.unlink(tmp)
+        try:
+            with open(tmp, "w") as f:
+                f.write(str(v))
+            os.replace(tmp, os.path.join(self._meta_dir, VERSION_HINT))
+        except OSError:
+            with contextlib.suppress(OSError):
+                os.unlink(tmp)
+            logging.getLogger(__name__).warning(
+                "version hint not updated for %s", self.root, exc_info=True
+            )
 
     def _update_metadata(self, mutate, written: list[str] | None = None):
         """The optimistic metadata commit every table change goes through
@@ -402,17 +437,18 @@ class LakehouseTable:
         alias."""
         return _lineage_on(self.properties())
 
-    def name_mapping(self) -> dict[str, list[str]]:
+    def name_mapping(self, meta: dict | None = None) -> dict[str, list[str]]:
         """Parse the ``schema.name-mapping.default`` table property (the
         Iceberg NameMapping JSON: ``[{"field-id": n, "names": [...]}, ...]``)
         into {schema field name → alias names}. The reference resolves
         incoming record fields through this mapping
         (RecordConverter.java:100-103,245-271)."""
-        raw = self.properties().get("schema.name-mapping.default")
+        meta = self.metadata() if meta is None else meta
+        raw = meta["properties"].get("schema.name-mapping.default")
         if not raw:
             return {}
         entries = json.loads(raw)
-        field_names = {f.name for f in self.schema().fields}
+        field_names = {f["name"] for f in meta["schema"]["fields"]}
         out: dict[str, list[str]] = {}
         for e in entries:
             names = e.get("names", [])
@@ -521,10 +557,10 @@ class LakehouseTable:
                 meta, written, operation, data_files, delete_files, summary,
                 branch, replace, new_schema, preserve_seq,
             )
-            return snap, True
+            return (snap, meta["properties"]), True
 
-        snap = self._update_metadata(mutate, written)
-        self._maybe_merge_manifests(operation, branch)
+        snap, props = self._update_metadata(mutate, written)
+        self._maybe_merge_manifests(operation, branch, props)
         return snap
 
     def _stage_snapshot(
@@ -597,14 +633,15 @@ class LakehouseTable:
             if lineage:
                 meta["next-row-id"] = next_row_id
 
-            json.dump(
-                {
-                    "added_data_files": stamped_data,
-                    "added_delete_files": [
-                        {**df_, "seq": _seq(df_)} for df_ in delete_files
-                    ],
-                },
-                f,
+            f.write(
+                json.dumps(
+                    {
+                        "added_data_files": stamped_data,
+                        "added_delete_files": [
+                            {**df_, "seq": _seq(df_)} for df_ in delete_files
+                        ],
+                    }
+                )
             )
         snap = {
             "snapshot_id": sid,
@@ -622,11 +659,14 @@ class LakehouseTable:
             meta["schema"] = new_schema
         return snap
 
-    def _maybe_merge_manifests(self, operation: str, branch: str) -> None:
+    def _maybe_merge_manifests(
+        self, operation: str, branch: str, props: dict
+    ) -> None:
         """Iceberg's automatic manifest merging on commit
         (``commit.manifest.min-count-to-merge``, TableProperties default
         100 — merge when the manifest count crosses the threshold): when
-        the property is set on this table and the metadata walk behind
+        the property is set in ``props`` (the properties of the version
+        just committed) and the metadata walk behind
         ``branch`` is at least that deep, squash it with
         ``rewrite_manifests()`` right after the commit. Opt-in (unset =
         never), self-guarding (a rewrite-manifests commit never
@@ -641,7 +681,7 @@ class LakehouseTable:
         just leaves the merge for the next commit."""
         if operation == "rewrite-manifests":
             return
-        raw = self.properties().get("commit.manifest.min-count-to-merge")
+        raw = props.get("commit.manifest.min-count-to-merge")
         if raw is None:
             return
         try:
@@ -708,6 +748,8 @@ class LakehouseTable:
         subdir: str,
         sort_by: list[str] | None = None,
         staged_keys: list[str] | None = None,
+        *,
+        meta: dict | None = None,
     ) -> list[dict]:
         """Write a DataFrame as data files under a fresh uuid dir; the
         derived partition columns (if any) are appended and partitionBy'd so
@@ -715,12 +757,13 @@ class LakehouseTable:
         (our OCF reader reads explicit file lists; no directory layout to
         prune).
 
-        One metadata load serves the whole write: format, partition spec,
-        sort order, distribution mode, bloom-filter and file-size
-        properties. ``_distribute`` shapes the frame from them plus the
-        ad-hoc ``sort_by`` (``rewrite_where``) and ``staged_keys`` (a
-        row-level delta written by ``_write_delete_and_data``)."""
-        meta = self.metadata()
+        One metadata load serves the whole write (none when the caller
+        passes its ``meta``): format, partition spec, sort order,
+        distribution mode, bloom-filter and file-size properties.
+        ``_distribute`` shapes the frame from them plus the ad-hoc
+        ``sort_by`` (``rewrite_where``) and ``staged_keys`` (a row-level
+        delta written by ``_write_delete_and_data``)."""
+        meta = self.metadata() if meta is None else meta
         props = meta["properties"]
         fmt = _file_format(props)
         out_dir = os.path.join(self.root, subdir, uuid.uuid4().hex)
@@ -861,16 +904,25 @@ class LakehouseTable:
         return (tot_b / tot_r) if tot_r else None
 
     # ---------------------------------------------------------------- write
-    def _project(self, df: DataFrame, case_insensitive: bool = False) -> DataFrame:
+    def _project(
+        self,
+        df: DataFrame,
+        case_insensitive: bool = False,
+        meta: dict | None = None,
+    ) -> DataFrame:
         """Schema-directed projection with the table's name mapping applied
         (RecordConverter.java:100-103); columns the writer omitted fill
         with their ``write-default`` (v3 default values) before the
-        projection NULL-fills what remains."""
+        projection NULL-fills what remains. Schema and mapping come from
+        ``meta`` (one load when None)."""
+        meta = self.metadata() if meta is None else meta
+        schema = T.StructType.fromJson(meta["schema"])
+        mapping = self.name_mapping(meta)
         return project_to_schema(
-            self._apply_write_defaults(df),
-            self.schema(),
+            self._apply_write_defaults(df, schema, mapping),
+            schema,
             case_insensitive=case_insensitive,
-            name_mapping=self.name_mapping(),
+            name_mapping=mapping,
         )
 
     def append(
@@ -879,10 +931,17 @@ class LakehouseTable:
         branch: str = MAIN,
         snapshot_props: dict | None = None,
         case_insensitive: bool = False,
+        *,
+        meta: dict | None = None,
     ) -> dict:
-        """S4: append path — one atomic snapshot per call (T6)."""
-        data = self._project(df, case_insensitive)
-        files = self._write_files(data, "data")
+        """S4: append path — one atomic snapshot per call (T6).
+
+        ``meta`` is the table metadata the caller already loaded; the
+        projection and the file write use it instead of loading their own,
+        and the commit loads the head itself."""
+        meta = self.metadata() if meta is None else meta
+        data = self._project(df, case_insensitive, meta)
+        files = self._write_files(data, "data", meta=meta)
         return self._commit_snapshot(
             "append", files, [], snapshot_props or {}, branch
         )
@@ -924,6 +983,8 @@ class LakehouseTable:
         upsert_mode: bool = True,
         case_insensitive: bool = False,
         assume_unique: bool = False,
+        *,
+        meta: dict | None = None,
     ) -> dict:
         """S5: delta path — equality-delete keys + appended rows, one atomic
         snapshot (T7). Deletes at sequence N apply to data with sequence < N;
@@ -946,13 +1007,17 @@ class LakehouseTable:
         changelog collapse): the within-batch collapse shuffle — and the
         per-op window pass — are skipped entirely. The caller owns the
         guarantee; duplicate keys under this flag produce duplicate rows.
+
+        ``meta`` is the table metadata the caller already loaded, as for
+        ``append``.
         """
         from ..operators.cdc import DELETE, UPDATE, collapse_last_wins
 
+        meta = self.metadata() if meta is None else meta
         if key_cols is None:
             # BaseDeltaTaskWriter parity: the schema's identifier fields
             # are the default row identity when no id-columns are given
-            key_cols = self.identifier_fields()
+            key_cols = self.identifier_fields(meta)
             if not key_cols:
                 raise ValueError(
                     "upsert needs key_cols (table has no identifier fields)"
@@ -990,9 +1055,9 @@ class LakehouseTable:
                 keys = batch.select(*key_cols)
             if op_col is not None and op_col in batch.columns:
                 inserts = inserts.filter(F.col(op_col) != DELETE)
-            data = self._project(inserts, case_insensitive)
+            data = self._project(inserts, case_insensitive, meta)
             delete_files, data_files = self._write_delete_and_data(
-                keys, key_cols, data
+                keys, key_cols, data, meta
             )
             return self._commit_snapshot(
                 "overwrite", data_files, delete_files,
@@ -1041,6 +1106,7 @@ class LakehouseTable:
         deletes: DataFrame,
         key_cols: list[str] | None,
         staged_keys: list[str] | None = None,
+        meta: dict | None = None,
     ) -> list[dict]:
         """Write delete files and stamp each entry with its delete kind:
         equality deletes record their key column set (read() groups
@@ -1054,7 +1120,7 @@ class LakehouseTable:
         return [
             {**f, **stamp}
             for f in self._write_files(
-                deletes, "deletes", staged_keys=staged_keys
+                deletes, "deletes", staged_keys=staged_keys, meta=meta
             )
         ]
 
@@ -1063,6 +1129,7 @@ class LakehouseTable:
         deletes: DataFrame | None,
         key_cols: list[str] | None,
         data: DataFrame | None,
+        meta: dict | None = None,
     ) -> tuple[list[dict], list[dict]]:
         """The one writer of a row-level delta (upsert, MERGE, UPDATE):
         one commit's delete files (equality on ``key_cols``, or position
@@ -1073,21 +1140,29 @@ class LakehouseTable:
         write) instead of their sum — the latency term every micro-batch
         of a streaming CDC sync pays per commit. Both writes pass
         ``staged_keys``, so ``_distribute`` sizes their files from the
-        data. A None side writes nothing and returns []."""
+        data, and both use one metadata load (``meta`` when given). The
+        pool threads run their jobs in the caller's job group. A None side
+        writes nothing and returns []."""
         from concurrent.futures import ThreadPoolExecutor
 
+        from ..session import caller_job_group_target
+
+        meta = self.metadata() if meta is None else meta
         staged_keys = list(key_cols or [])
+        spark = (deletes if deletes is not None else data).sparkSession
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_del = (
                 pool.submit(
-                    self._write_delete_files, deletes, key_cols, staged_keys
+                    caller_job_group_target(spark, self._write_delete_files),
+                    deletes, key_cols, staged_keys, meta,
                 )
                 if deletes is not None
                 else None
             )
             f_dat = (
                 pool.submit(
-                    self._write_files, data, "data", staged_keys=staged_keys
+                    caller_job_group_target(spark, self._write_files),
+                    data, "data", staged_keys=staged_keys, meta=meta,
                 )
                 if data is not None
                 else None
@@ -1596,12 +1671,14 @@ class LakehouseTable:
 
         self._update_metadata(mutate)
 
-    def _apply_write_defaults(self, df: DataFrame) -> DataFrame:
+    @staticmethod
+    def _apply_write_defaults(
+        df: DataFrame, schema: T.StructType, mapping: dict[str, list[str]]
+    ) -> DataFrame:
         """Fill columns an append omitted entirely with their
         ``write-default`` (a column present under an alias counts as
         present — name mapping resolves it in the projection)."""
-        mapping = self.name_mapping()
-        for f in self.schema().fields:
+        for f in schema.fields:
             if not f.metadata or "write-default" not in f.metadata:
                 continue
             alts = mapping.get(f.name, [])
@@ -5185,10 +5262,10 @@ class LakehouseTable:
                 meta, written, snap.get("operation", "append"), d, dl,
                 summary, branch,
             )
-            return picked, True
+            return (picked, meta["properties"]), True
 
-        picked = self._update_metadata(mutate, written)
-        self._maybe_merge_manifests(picked["operation"], branch)
+        picked, props = self._update_metadata(mutate, written)
+        self._maybe_merge_manifests(picked["operation"], branch, props)
         return picked
 
     def publish_wap(self, wap_id: str, branch: str = MAIN) -> dict:

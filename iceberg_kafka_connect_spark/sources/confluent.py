@@ -41,12 +41,13 @@ unknown field numbers are skipped by wire type.
 
 from __future__ import annotations
 
+import hashlib
 import io
 import json
 import struct
 from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -185,17 +186,39 @@ def decode_avro_payload(schema: dict, payload: bytes) -> dict:
 # per-executor writer-schema cache: one registry fetch per schema id per
 # python worker process (the CachedSchemaRegistryClient pattern)
 _EXECUTOR_SCHEMAS: dict[tuple[str, int], dict] = {}
+# compiled decoders beside it, keyed by (schema source, schema id,
+# json_mode): a record's lookup is one dict probe, not a schema re-hash
+_EXECUTOR_DECODERS: dict[tuple, Callable[[bytes], Any]] = {}
 
 
-def _resolve_writer_decoder(schema_id: int, registry_url: str, token):
-    """Compiled json-mode decoder for a writer schema id (the value.
-    converter hot path): one registry fetch + one compile per id per
-    worker process; each record is then a chain of direct closure calls
-    (sources/avro_fast.py — ~2.5x the generic codec)."""
-    from .avro_fast import decoder_for
+def _resolve_writer_decoder(
+    schema_id: int,
+    registry_url: str | None,
+    token: str | None,
+    json_mode: bool = True,
+    prefetched: dict[int, dict] | None = None,
+    prefetched_key: str | None = None,
+) -> Callable[[bytes], Any]:
+    """Compiled decoder for a writer schema id (the converter hot path):
+    one registry fetch + one compile per id per worker process; each
+    record is then a chain of direct closure calls (sources/avro_fast.py
+    — ~2.5x the generic codec). A schema taken from ``prefetched`` is
+    cached under ``prefetched_key``, a fingerprint of that map."""
+    source = (
+        prefetched_key
+        if prefetched is not None and schema_id in prefetched
+        else registry_url
+    )
+    key = (source, schema_id, json_mode)
+    dec = _EXECUTOR_DECODERS.get(key)
+    if dec is None:
+        from .avro_fast import decoder_for
 
-    wschema = _resolve_writer_schema(schema_id, None, registry_url, token)
-    return decoder_for(wschema, json_mode=True)
+        wschema = _resolve_writer_schema(
+            schema_id, prefetched, registry_url, token
+        )
+        dec = _EXECUTOR_DECODERS[key] = decoder_for(wschema, json_mode)
+    return dec
 
 
 def _resolve_writer_schema(
@@ -221,6 +244,26 @@ def _resolve_writer_schema(
     schema = json.loads(client.get_by_id(schema_id)["schema"])
     _EXECUTOR_SCHEMAS[key] = schema
     return schema
+
+
+def _avro_values_to_json(col, registry_url: str, token: str | None, on_error):
+    """One Arrow batch of the AvroConverter: framed Avro values -> JSON
+    text. None stays None; an undecodable value becomes
+    ``on_error(exc, raw)``."""
+    import pandas as pd
+
+    out = []
+    for raw in col:
+        if raw is None:
+            out.append(None)
+            continue
+        try:
+            sid, payload = unframe(bytes(raw))
+            dec = _resolve_writer_decoder(sid, registry_url, token)
+            out.append(json.dumps(dec(payload)))
+        except Exception as exc:  # noqa: BLE001 — mapped to DLQ
+            out.append(on_error(exc, bytes(raw)))
+    return pd.Series(out, dtype="object")
 
 
 def encode_confluent_avro(
@@ -301,18 +344,27 @@ def decode_confluent_avro(
 
     defaults = defaults or {}
     rfields = list(reader_schema.fields)
+    schemas_key = (
+        None
+        if schemas is None
+        else "prefetched:" + hashlib.sha1(
+            json.dumps(schemas, sort_keys=True).encode()
+        ).hexdigest()
+    )
 
     def _dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             cols: dict[str, list] = {f.name: [] for f in rfields}
-            from .avro_fast import decoder_for
-
             for raw in pdf[value_col]:
                 sid, payload = unframe(bytes(raw))
-                wschema = _resolve_writer_schema(
-                    sid, schemas, registry_url, token
-                )
-                datum = decoder_for(wschema)(payload)
+                datum = _resolve_writer_decoder(
+                    sid,
+                    registry_url,
+                    token,
+                    json_mode=False,
+                    prefetched=schemas,
+                    prefetched_key=schemas_key,
+                )(payload)
                 for f in rfields:
                     v = datum.get(f.name, defaults.get(f.name))
                     cols[f.name].append(_coerce_to_spark(v, f.dataType))
@@ -1001,22 +1053,9 @@ def converter_from_properties(
 
         @pandas_udf(T.StringType())
         def _avro_to_json(col):
-            import pandas as pd
-
-            out = []
-            for raw in col:
-                if raw is None:
-                    out.append(None)
-                    continue
-                try:
-                    sid, payload = unframe(bytes(raw))
-                    dec = _resolve_writer_decoder(
-                        sid, registry_url, token
-                    )
-                    out.append(json.dumps(dec(payload)))
-                except Exception as exc:  # noqa: BLE001 — mapped to DLQ
-                    out.append(_decode_error(exc, bytes(raw)))
-            return pd.Series(out, dtype="object")
+            return _avro_values_to_json(
+                col, registry_url, token, _decode_error
+            )
 
         def _avro(batch: DataFrame) -> DataFrame:
             return batch.withColumn(column, _avro_to_json(column))

@@ -17,16 +17,18 @@ Structured Streaming replaces all of it:
   writes
 
 Scale: the batch DataFrame is persisted once and every routed table write is
-a column-pruned pass; per-table commits are independent snapshots. They run
-one after another by default; with ``commit_threads > 1`` and more than one
-routed table they run on a thread pool like the reference's commit.threads,
-which the table commit protocol (one optimistic, retried metadata commit per
-change) makes safe.
+a column-pruned pass; per-table commits are independent snapshots, written
+on a thread pool of ``commit_threads`` (default 2 × CPUs, the reference's
+commit.threads), which the table commit protocol (one optimistic, retried
+metadata commit per change) makes safe. The micro-batch, not the table
+write, is the unit of atomicity: a replay skips every table that already
+committed it.
 """
 
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,6 +43,7 @@ from ..routing import (
     static_route_filter,
 )
 from ..schema import force_optional
+from ..session import caller_job_group_target
 from ..sinks.catalog import Catalog
 
 BATCH_ID_PROP = "streaming-batch-id"
@@ -204,23 +207,25 @@ class SinkPipeline:
                     for i, t in enumerate(specs):
                         if counts[f"__r{i}"] == 0:
                             routed.pop(t.name, None)
-            if cfg.commit_threads > 1 and len(routed) > 1:
-                # T8: parallel per-table commit (Coordinator.java:89,147-153).
-                # Spark job submission is thread-safe; each table's snapshot
-                # commit is independent. Fail-fast on the first error, like
-                # the reference's stop-on-failure pool.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=cfg.commit_threads) as pool:
-                    futures = [
-                        pool.submit(self._write_table, name, df, props)
-                        for name, df in routed.items()
-                    ]
-                    for f in futures:
-                        f.result()
-            else:
-                for table_name, df in routed.items():
-                    self._write_table(table_name, df, props)
+            # T8: parallel per-table commit (Coordinator.java:89,147-153).
+            # Spark job submission is thread-safe; each table's snapshot
+            # commit is independent, and its jobs run in the caller's job
+            # group. Fail-fast on the first error, like the reference's
+            # stop-on-failure pool; the pool still drains, and a replay
+            # skips the tables that committed. One wrap per task: each
+            # thread gets its own copy of the local properties.
+            spark = records.sparkSession
+            workers = max(1, min(cfg.commit_threads, len(routed)))
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                futures = [
+                    pool.submit(
+                        caller_job_group_target(spark, self._write_table),
+                        name, df, props,
+                    )
+                    for name, df in routed.items()
+                ]
+                for f in futures:
+                    f.result()
         finally:
             records.unpersist()
             if parsed is not None:
@@ -256,7 +261,7 @@ class SinkPipeline:
         table = self.catalog.create_table_if_not_exists(
             self.config.dlq_table, dlq_rows.schema
         )
-        last = self._last_batch_id(table, "main")
+        last = self._last_batch_id(table.metadata(), "main")
         if last is not None and batch_id <= last:
             return
         table.append(
@@ -332,6 +337,11 @@ class SinkPipeline:
 
     # ----------------------------------------------------------- table write
     def _write_table(self, name: str, df: DataFrame, props: dict) -> None:
+        """Write and commit one routed table's share of the batch, unless
+        a replay finds the batch already committed there. One metadata
+        load serves the idempotence walk, the upsert key, the write and
+        the mirror check (reloaded only after a schema change); the
+        commit loads the head itself."""
         cfg = self.config
         tcfg = cfg.table(name)
         branch = tcfg.commit_branch if tcfg else cfg.default_commit_branch
@@ -374,12 +384,13 @@ class SinkPipeline:
         # snapshot ancestry for this pipeline (summary-walk like the
         # reference's offset filtering)
         props = {**props, PIPELINE_PROP: self.pipeline_id}
-        last = self._last_batch_id(table, branch)
+        meta = table.metadata()
+        last = self._last_batch_id(meta, branch)
         if last is not None and int(props[BATCH_ID_PROP]) <= last:
             return
 
-        if cfg.evolve_schema:
-            table.evolve_schema(record_schema)
+        if cfg.evolve_schema and table.evolve_schema(record_schema):
+            meta = table.metadata()
 
         # upsert key: per-table id-columns, else the global default-id-columns
         # (IcebergSinkConfig.java:73,345), else the table schema's identifier
@@ -387,7 +398,7 @@ class SinkPipeline:
         id_cols = (
             (tcfg.id_columns if tcfg else [])
             or cfg.default_id_columns
-            or table.identifier_fields()
+            or table.identifier_fields(meta)
         )
         if (cfg.upsert_mode or cfg.cdc_field) and id_cols:
             order = [c for c in ("timestamp", "offset") if c in df.columns]
@@ -403,6 +414,7 @@ class SinkPipeline:
                 # write delete keys (BaseDeltaTaskWriter.java:72-84)
                 upsert_mode=cfg.upsert_mode,
                 case_insensitive=cfg.schema_case_insensitive,
+                meta=meta,
             )
         else:
             table.append(
@@ -410,6 +422,7 @@ class SinkPipeline:
                 branch=branch,
                 snapshot_props=props,
                 case_insensitive=cfg.schema_case_insensitive,
+                meta=meta,
             )
 
         # continuous Iceberg mirror: with the table property
@@ -421,9 +434,8 @@ class SinkPipeline:
         # O(live files) metadata per commit, no data IO; at very high
         # commit cadence set the property on a timer-driven maintenance
         # job instead.
-        mirror = str(
-            table.properties().get("iceberg.mirror.enabled", "")
-        ).lower()
+        table_props = meta["properties"]
+        mirror = str(table_props.get("iceberg.mirror.enabled", "")).lower()
         if mirror == "true":
             from ..sinks.iceberg_export import export_iceberg_metadata
 
@@ -435,21 +447,20 @@ class SinkPipeline:
             # write.metadata.delete-after-commit.enabled surface) so a
             # long-lived stream doesn't accrete one full metadata tree
             # per batch forever — an explicit property wins either way.
-            props = table.properties()
             export_iceberg_metadata(
                 table,
                 history_depth=(
-                    None if "export.history-depth" in props else 1
+                    None if "export.history-depth" in table_props else 1
                 ),
                 delete_after_commit=(
                     None
-                    if "write.metadata.delete-after-commit.enabled" in props
+                    if "write.metadata.delete-after-commit.enabled"
+                    in table_props
                     else True
                 ),
             )
 
-    def _last_batch_id(self, table, branch: str) -> int | None:
-        meta = table.metadata()
+    def _last_batch_id(self, meta: dict, branch: str) -> int | None:
         sid = meta["refs"].get(branch)
         while sid is not None:
             snap = next(

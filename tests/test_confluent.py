@@ -938,3 +938,76 @@ def test_compiled_decoder_agrees_with_generic_codec():
     row2 = dict(row, l=None)
     p2 = encode_avro_payload(schema, row2)
     assert decoder_for(schema)(p2)["l"] is None
+
+
+def test_writer_schema_compiles_once_per_id_per_process(monkeypatch):
+    """The converter hot path compiles each writer schema once per process
+    and then finds its decoder with one dict probe per record: no schema
+    re-serialization per record, in either lane (registry and prefetched),
+    across many records and Arrow batches."""
+    import pandas as pd
+
+    from iceberg_kafka_connect_spark.sources import avro_fast, confluent
+    from iceberg_kafka_connect_spark.sources.confluent import (
+        _avro_values_to_json,
+        _resolve_writer_decoder,
+        encode_avro_payload,
+    )
+
+    base = [("id", "long"), ("name", ["null", "string"])]
+    v1 = {"type": "record", "name": "r",
+          "fields": [{"name": n, "type": t} for n, t in base]}
+    v2 = {"type": "record", "name": "r",
+          "fields": v1["fields"] + [{"name": "x", "type": "double"}]}
+    compiled, looked_up = [], []
+    real_compile, real_for = avro_fast.compile_decoder, avro_fast.decoder_for
+
+    def spy_compile(schema, json_mode=False):
+        if schema in (v1, v2):
+            compiled.append((schema["fields"][-1]["name"], json_mode))
+        return real_compile(schema, json_mode)
+
+    def spy_for(schema, json_mode=False):
+        looked_up.append(json_mode)
+        return real_for(schema, json_mode)
+
+    monkeypatch.setattr(avro_fast, "compile_decoder", spy_compile)
+    monkeypatch.setattr(avro_fast, "decoder_for", spy_for)
+    monkeypatch.setattr(avro_fast, "_CACHE", {})
+    monkeypatch.setattr(confluent, "_EXECUTOR_DECODERS", {})
+    monkeypatch.setattr(confluent, "_EXECUTOR_SCHEMAS", {})
+
+    def _fail(exc, raw):
+        raise exc
+
+    with SchemaRegistryServer() as srv:
+        c = SchemaRegistryClient(srv.uri)
+        id1 = c.register("r-value", v1)
+        id2 = c.register("r-value", v2)
+        for b in range(3):  # three Arrow batches, 40 records each
+            vals = []
+            for i in range(40):
+                if i % 2:
+                    row, sid, sch = {"id": i, "name": None, "x": 0.5}, id2, v2
+                else:
+                    row, sid, sch = {"id": i, "name": f"n{b}"}, id1, v1
+                vals.append(frame(sid, encode_avro_payload(sch, row)))
+            out = _avro_values_to_json(pd.Series(vals), srv.uri, None, _fail)
+            assert json.loads(out[0]) == {"id": 0, "name": f"n{b}"}
+            assert json.loads(out[1])["x"] == 0.5
+        assert sorted(compiled) == [("name", True), ("x", True)]
+        assert looked_up == [True, True]
+
+        # the prefetched lane (decode_confluent_avro): its own decoders,
+        # keyed by the prefetched map's fingerprint, compiled once too
+        prefetched = {id1: v1, id2: v2}
+        for _ in range(50):
+            for sid in (id1, id2):
+                _resolve_writer_decoder(
+                    sid, None, None, json_mode=False,
+                    prefetched=prefetched, prefetched_key="fp",
+                )
+        assert sorted(compiled) == [
+            ("name", False), ("name", True), ("x", False), ("x", True)
+        ]
+        assert looked_up == [True, True, False, False]
