@@ -58,8 +58,8 @@ _HOW = {
 }
 
 
-def _bucket_field(table, key: str):
-    for pf in table.partition_spec():
+def _bucket_field(table, key: str, meta: dict | None = None):
+    for pf in table.partition_spec(meta):
         if pf.transform == "iceberg_bucket" and pf.source == key:
             return pf
     raise ValueError(
@@ -69,11 +69,11 @@ def _bucket_field(table, key: str):
 
 
 def _files_by_bucket(
-    table, pf, branch: str = "main"
+    table, pf, branch: str, meta: dict
 ) -> tuple[dict[int, list[dict]], list[dict], list[dict]]:
     """Live data files keyed by bucket id, plus the NULL-partition files
     and the table's live delete files (applied per bucket by the caller)."""
-    data_files, delete_files = table.live_files(branch=branch)
+    data_files, delete_files = table.live_files(branch=branch, meta=meta)
     out: dict[int, list[dict]] = {}
     null_files: list[dict] = []
     for f in data_files:
@@ -94,17 +94,19 @@ def _files_by_bucket(
     return out, null_files, delete_files
 
 
-def _read_bucket(spark, table, files, deletes) -> DataFrame:
+def _read_bucket(spark, table, files, deletes, meta: dict) -> DataFrame:
     """One bucket's rows with the table's merge-on-read delete state
-    applied (read semantics identical to LakehouseTable.read)."""
+    applied (read semantics identical to LakehouseTable.read), planned
+    from the join's one metadata load of ``table``."""
     df = table._read_file_group(
         spark,
         files,
-        table.read_schema(),
+        table.read_schema(meta),
         with_position=_has_positional(deletes),
+        meta=meta,
     )
     if deletes:
-        df = table._apply_deletes(spark, df, deletes)
+        df = table._apply_deletes(spark, df, deletes, meta=meta)
     return df.drop("__seq", "__fp", "__pos")
 
 
@@ -153,15 +155,16 @@ def storage_partitioned_join(
     how = norm
     if max_join_groups < 1:
         raise ValueError("max_join_groups must be >= 1")
-    pa, pb = _bucket_field(left, key), _bucket_field(right, key)
+    lmeta, rmeta = left.metadata(), right.metadata()
+    pa, pb = _bucket_field(left, key, lmeta), _bucket_field(right, key, rmeta)
     if int(pa.param) != int(pb.param):
         raise ValueError(
             f"bucket counts differ: left {pa.param} vs right {pb.param} — "
             "co-location needs identical specs"
         )
-    la, lnull, ldel = _files_by_bucket(left, pa, branch)
-    lb, rnull, rdel = _files_by_bucket(right, pb, branch)
-    lschema, rschema = left.read_schema(), right.read_schema()
+    la, lnull, ldel = _files_by_bucket(left, pa, branch, lmeta)
+    lb, rnull, rdel = _files_by_bucket(right, pb, branch, rmeta)
+    lschema, rschema = left.read_schema(lmeta), right.read_schema(rmeta)
     lcols = {f.name for f in lschema.fields}
     rename = {
         f.name: f"{f.name}_r"
@@ -170,7 +173,7 @@ def storage_partitioned_join(
     }
 
     def _right_frame(files) -> DataFrame:
-        db = _read_bucket(spark, right, files, rdel)
+        db = _read_bucket(spark, right, files, rdel, rmeta)
         for old, new in rename.items():
             db = db.withColumnRenamed(old, new)
         return db
@@ -210,7 +213,7 @@ def storage_partitioned_join(
     parts: list[DataFrame] = []
     for grp in _groups(both):
         da = _read_bucket(
-            spark, left, [f for b in grp for f in la[b]], ldel
+            spark, left, [f for b in grp for f in la[b]], ldel, lmeta
         )
         db = _right_frame([f for b in grp for f in lb[b]])
         if broadcast_right:
@@ -222,13 +225,17 @@ def storage_partitioned_join(
     if how in ("left", "full"):
         for grp in _groups(lonly):
             files = [f for b in grp for f in la[b]]
-            parts.append(_left_only(_read_bucket(spark, left, files, ldel)))
+            parts.append(
+                _left_only(_read_bucket(spark, left, files, ldel, lmeta))
+            )
     if how in ("right", "full"):
         for grp in _groups(ronly):
             parts.append(_right_only(_right_frame([f for b in grp for f in lb[b]])))
     # NULL join keys never match: preserved sides emit them null-extended
     if lnull and how in ("left", "full"):
-        parts.append(_left_only(_read_bucket(spark, left, lnull, ldel)))
+        parts.append(
+            _left_only(_read_bucket(spark, left, lnull, ldel, lmeta))
+        )
     if rnull and how in ("right", "full"):
         parts.append(_right_only(_right_frame(rnull)))
     if not parts:

@@ -24,10 +24,13 @@ Parity map (reference → here):
 - time travel → read(snapshot_id=...)
 
 Scale notes: data/delete files are only ever touched by executors through
-df.read/write; the driver handles metadata JSON only (like Iceberg). Reads
-group files by sequence number so the merge-on-read anti-join is one
-broadcast-or-shuffle join on the key columns; compact() folds deletes into
-data files to bound read amplification, exactly like Iceberg maintenance.
+df.read/write; the driver handles metadata JSON only (like Iceberg). A scan
+loads the version JSON once and reads files with one Spark reader per file
+layout — every unpartitioned write shares one, each row tagged with its
+file's sequence number (Iceberg's per-task data sequence number) — so the
+merge-on-read anti-join is one broadcast-or-shuffle join on the key columns
+however many commits the table has; compact() folds deletes into data files
+to bound read amplification, exactly like Iceberg maintenance.
 """
 
 from __future__ import annotations
@@ -150,6 +153,26 @@ def _fp_norm(col: Column) -> Column:
         F.regexp_replace(
             F.regexp_replace(col, r"^file:/+", "/"), r"\+", "%2B"
         )
+    )
+
+
+def _file_seq(seq_of: dict[str, int]) -> Column:
+    """A scanned row's sequence number, looked up by its file's name in
+    one literal map (a reader spanning several writes' files). The name,
+    not ``_fp_norm(_metadata.file_path)``: it needs no per-row URI
+    decoding. A file missing from the map fails the scan: a NULL
+    ``__seq`` would make every delete-sequence comparison NULL and drop
+    the row silently."""
+    entries = ", ".join(
+        "'" + n.replace("\\", "\\\\").replace("'", "\\'") + f"', {s}L"
+        for n, s in seq_of.items()
+    )
+    name = F.col("_metadata.file_name")
+    return F.coalesce(
+        F.element_at(F.expr(f"map({entries})"), name),
+        F.raise_error(
+            F.concat(F.lit("no sequence number recorded for scanned file "), name)
+        ).cast("long"),
     )
 
 
@@ -409,11 +432,13 @@ class LakehouseTable:
                     raise
                 time.sleep(COMMIT_BACKOFF_S * (attempt + 1))
 
-    def schema(self) -> T.StructType:
-        return T.StructType.fromJson(self.metadata()["schema"])
+    def schema(self, meta: dict | None = None) -> T.StructType:
+        meta = self.metadata() if meta is None else meta
+        return T.StructType.fromJson(meta["schema"])
 
-    def partition_spec(self) -> list[PartitionField]:
-        return [PartitionField.from_json(d) for d in self.metadata()["partition_spec"]]
+    def partition_spec(self, meta: dict | None = None) -> list[PartitionField]:
+        meta = self.metadata() if meta is None else meta
+        return [PartitionField.from_json(d) for d in meta["partition_spec"]]
 
     def properties(self) -> dict:
         return self.metadata()["properties"]
@@ -457,13 +482,14 @@ class LakehouseTable:
                 out[canon] = [n for n in names if n != canon]
         return out
 
-    def read_schema(self) -> T.StructType:
+    def read_schema(self, meta: dict | None = None) -> T.StructType:
         """Table schema extended with the derived partition columns (typed),
         so partition predicates prune at the scan."""
-        schema = self.schema()
+        meta = self.metadata() if meta is None else meta
+        schema = self.schema(meta)
         names = {f.name for f in schema.fields}
         fields = list(schema.fields)
-        for pf in self.partition_spec():
+        for pf in self.partition_spec(meta):
             if pf.name not in names:
                 rt = pf.result_type()
                 if rt is not None:
@@ -479,8 +505,10 @@ class LakehouseTable:
     def snapshots(self) -> list[dict]:
         return self.metadata()["snapshots"]
 
-    def current_snapshot(self, branch: str = MAIN) -> dict | None:
-        meta = self.metadata()
+    def current_snapshot(
+        self, branch: str = MAIN, meta: dict | None = None
+    ) -> dict | None:
+        meta = self.metadata() if meta is None else meta
         sid = meta["refs"].get(branch)
         if sid is None:
             return None
@@ -1985,7 +2013,7 @@ class LakehouseTable:
         None when no ancestor has been analyzed."""
         meta = self.metadata()
         by_sid = {s["snapshot-id"]: s for s in meta.get("statistics", [])}
-        cur = self.current_snapshot(branch)
+        cur = self.current_snapshot(branch, meta)
         while cur is not None:
             entry = by_sid.get(cur["snapshot_id"])
             if entry is not None:
@@ -2221,9 +2249,11 @@ class LakehouseTable:
         tag: str | None = None,
         as_of_ms: int | None = None,
     ) -> DataFrame:
-        """Merge-on-read scan: data files grouped by sequence number, each
-        group projected onto the current schema, minus keys equality-deleted
-        at a later sequence.
+        """Merge-on-read scan: the live data files, one Spark reader per
+        file layout (``_read_file_group``: every unpartitioned write shares
+        one) projected onto the current schema, each row tagged with its
+        file's sequence number, minus keys equality-deleted at a later
+        sequence. One metadata load plans the whole scan.
 
         ``as_of_ms`` is timestamp time travel (Iceberg / SQL
         ``FOR SYSTEM_TIME AS OF``): reads the LATEST snapshot on
@@ -2241,7 +2271,7 @@ class LakehouseTable:
         Pruning is conservative; the predicate is always re-applied to rows.
         """
         meta = self.metadata()
-        target = self.read_schema()
+        target = self.read_schema(meta)
         if as_of_ms is not None:
             if snapshot_id is not None or tag is not None:
                 raise ValueError(
@@ -2276,19 +2306,21 @@ class LakehouseTable:
         data_files, delete_files = self._live_files(meta, snap)
         if where is not None:
             data_files = self._prune_bucket_partitions(
-                [f for f in data_files if file_may_match(f, where)], where
+                [f for f in data_files if file_may_match(f, where)],
+                where,
+                meta,
             )
             if not data_files:
                 return local_df(spark, [], target)
         with_pos = _has_positional(delete_files)
         data = self._read_file_group(
-            spark, data_files, target, with_position=with_pos
+            spark, data_files, target, with_position=with_pos, meta=meta
         )
         if data is None:
             return local_df(spark, [], target)
         if where is not None:
             data = data.filter(where)
-        return self._apply_deletes(spark, data, delete_files).drop(
+        return self._apply_deletes(spark, data, delete_files, meta=meta).drop(
             "__seq", "__fp", "__pos"
         )
 
@@ -2328,7 +2360,7 @@ class LakehouseTable:
                 'set_properties({"format-version": "3"})'
             )
         target = T.StructType(
-            list(self.read_schema().fields) + list(self.LINEAGE_FIELDS)
+            list(self.read_schema(meta).fields) + list(self.LINEAGE_FIELDS)
         )
         sid = meta["refs"].get(branch)
         if sid is None:
@@ -2336,12 +2368,12 @@ class LakehouseTable:
         snap = self._snapshot_by_id(meta, sid)
         data_files, delete_files = self._live_files(meta, snap)
         data = self._read_file_group(
-            spark, data_files, target, with_position=True
+            spark, data_files, target, with_position=True, meta=meta
         )
         if data is None:
             return local_df(spark, [], target)
         data = self._derive_lineage(spark, data, data_files)
-        return self._apply_deletes(spark, data, delete_files).drop(
+        return self._apply_deletes(spark, data, delete_files, meta=meta).drop(
             "__seq", "__fp", "__pos"
         )
 
@@ -2380,7 +2412,12 @@ class LakehouseTable:
         )
 
     def _apply_deletes(
-        self, spark: SparkSession, data: DataFrame, delete_files: list[dict]
+        self,
+        spark: SparkSession,
+        data: DataFrame,
+        delete_files: list[dict],
+        *,
+        meta: dict | None = None,
     ) -> DataFrame:
         """Merge-on-read delete application: ``data`` (carrying ``__seq``)
         minus keys equality-deleted at a later sequence. Delete files are
@@ -2393,7 +2430,10 @@ class LakehouseTable:
         ordinal) — exact regardless of key uniqueness, since new files get
         fresh uuid names a (fp, pos) pair can never alias. ``data`` must
         carry ``__fp``/``__pos`` (read with ``with_position=True``) or the
-        call refuses rather than silently resurrecting deleted rows."""
+        call refuses rather than silently resurrecting deleted rows.
+
+        Schema and name mapping come from ``meta`` (one load when None and
+        equality deletes are present)."""
         if not delete_files:
             return data
         pos_files = [
@@ -2443,10 +2483,11 @@ class LakehouseTable:
         # remapped (pre-existing tables could hold a mapping entry from a
         # rename that later had its old name reused) — only retired names
         # canonicalize
-        live = {f.name for f in self.schema().fields}
+        meta = self.metadata() if meta is None else meta
+        live = {f.name for f in self.schema(meta).fields}
         reverse = {
             alias: canon
-            for canon, aliases in self.name_mapping().items()
+            for canon, aliases in self.name_mapping(meta).items()
             for alias in aliases
             if alias not in live
         }
@@ -2563,7 +2604,7 @@ class LakehouseTable:
         from .puffin import DV_BLOB_TYPE, PuffinWriter, frame_dv_blob
 
         meta = self.metadata()
-        head = self.current_snapshot(branch)
+        head = self.current_snapshot(branch, meta)
         if head is None:
             return None
         data_files, delete_files = self._live_files(meta, head)
@@ -2777,8 +2818,22 @@ class LakehouseTable:
         files: list[dict],
         target: T.StructType | None,
         with_position: bool = False,
+        *,
+        meta: dict | None = None,
     ) -> DataFrame | None:
-        """``with_position=True`` additionally carries each row's physical
+        """Read data or delete file entries as one frame carrying each
+        row's ``__seq``: one Spark reader per file layout
+        (``_scan_groups``), each projected onto ``target`` (when given),
+        unioned. Like an Iceberg scan's one task list, every unpartitioned
+        write of a merge-on-read or incremental read shares one reader, so
+        a scan's readers and projections do not grow with its commits.
+
+        A reader whose files span several sequence numbers looks each
+        row's up by its file name (``_file_seq``); a single-sequence
+        reader stamps a literal. The name mapping and partition spec come
+        from ``meta`` (one load when None and ``target`` is given).
+
+        ``with_position=True`` additionally carries each row's physical
         identity — ``__fp`` (absolute file URI from ``_metadata.file_path``)
         and ``__pos`` (``_metadata.row_index``) — through the projection, so
         position deletes can anti-join on it. Parquet-only: Spark's row
@@ -2800,72 +2855,73 @@ class LakehouseTable:
                     T.StructField("__pos", T.LongType()),
                 ]
             )
-        # group by (seq, write base dir, format): basePath restores the
-        # partition directory columns partitionBy moved out of the files.
-        # Imported Iceberg entries instead carry the manifest's identity
-        # partition tuple ("partition_values"); those columns are
-        # reconstituted below via ONE broadcast (file path → tuple) join
-        # per group — grouping by tuple value instead would degenerate to
-        # one scan per file on a large imported table (the spec's
-        # PartitionUtil rule, done scan-shaped).
-        by_group: dict[tuple, list[str]] = {}
-        pv_by_path: dict[tuple, dict[str, dict]] = {}
-        schema_of: dict[tuple, str | None] = {}
-        for f in files:
-            key = (
-                f["seq"],
-                f.get("base", os.path.dirname(f["path"])),
-                f.get("format", "parquet"),
-            )
-            abs_path = os.path.join(self.root, f["path"])
-            by_group.setdefault(key, []).append(abs_path)
-            # the group's recorded write schema — usable only when every
-            # file in the group agrees (entries synthesized by imports or
-            # legacy manifests have none → footer inference fallback)
-            sj = f.get("spark_schema")
-            if key not in schema_of:
-                schema_of[key] = sj
-            elif schema_of[key] != sj:
-                schema_of[key] = None
-            pv = f.get("partition_values")
-            if pv:
-                pv_by_path.setdefault(key, {})[abs_path] = pv
+        if target is not None:
+            meta = self.metadata() if meta is None else meta
+            # name mapping lets files written before a rename_column
+            # resolve under their old physical column names
+            reverse = {
+                alias: canon
+                for canon, aliases in self.name_mapping(meta).items()
+                for alias in aliases
+            }
+            spec = self.partition_spec(meta)
         parts = []
-        for (seq, base, fmt), paths in sorted(by_group.items()):
-            pvals = pv_by_path.get((seq, base, fmt), {})
+        for fmt, base, group in self._scan_groups(files):
+            paths = [os.path.join(self.root, f["path"]) for f in group]
+            seqs = {f["seq"] for f in group}
+            one_seq = len(seqs) == 1
             if fmt == "avro":
                 from . import avro_io
 
                 df = avro_io.read_avro_files(spark, paths)
             else:
-                reader = spark.read.option("mergeSchema", "false").option(
-                    "basePath", os.path.join(self.root, base)
-                )
-                sj = schema_of.get((seq, base, fmt))
+                reader = spark.read.option("mergeSchema", "false")
+                if base is not None:
+                    # basePath restores the partition directory columns
+                    # partitionBy moved out of the files
+                    reader = reader.option(
+                        "basePath", os.path.join(self.root, base)
+                    )
+                # the recorded write schema — usable only when every file
+                # in the group agrees (entries synthesized by imports or
+                # add_files have none → footer inference fallback). It
+                # skips footer schema inference (one JVM open+read per
+                # load) and pins partition-directory column types and
+                # writer column order
+                sjs = {f.get("spark_schema") for f in group}
+                sj = sjs.pop() if len(sjs) == 1 else None
                 if sj:
-                    # the manifests' recorded write schema skips footer
-                    # schema inference (one JVM open+read per load); the
-                    # user-specified schema also pins partition-directory
-                    # column types and keeps writer column order
                     reader = reader.schema(T.StructType.fromJson(json.loads(sj)))
                 df = reader.format(fmt).load(paths)
+            if not one_seq:
+                df = df.withColumn(
+                    "__seq",
+                    _file_seq(
+                        {os.path.basename(f["path"]): f["seq"] for f in group}
+                    ),
+                )
             if with_position:
                 df = df.select(
                     "*",
                     F.col("_metadata.file_path").alias("__fp"),
                     F.col("_metadata.row_index").alias("__pos"),
                 )
-            df = self._fill_partition_tuples(df, pvals)
+            # imported Iceberg entries carry the manifest's identity
+            # partition tuple ("partition_values"): ONE broadcast (file
+            # path → tuple) join per group reconstitutes those columns
+            # (the spec's PartitionUtil rule, done scan-shaped)
+            df = self._fill_partition_tuples(
+                df,
+                {
+                    p: f["partition_values"]
+                    for p, f in zip(paths, group)
+                    if f.get("partition_values")
+                },
+            )
             if target is not None:
-                # name mapping lets files written before a rename_column
-                # resolve under their old physical column names — applied
-                # FIRST so the spec recompute below sees canonical names
-                # (a renamed partition source would otherwise skip it)
-                reverse = {
-                    alias: canon
-                    for canon, aliases in self.name_mapping().items()
-                    for alias in aliases
-                }
+                # renames apply FIRST so the spec recompute below sees
+                # canonical names (a renamed partition source would
+                # otherwise skip it)
                 for alias, canon in reverse.items():
                     if alias in df.columns and canon not in df.columns:
                         df = df.withColumnRenamed(alias, canon)
@@ -2873,7 +2929,7 @@ class LakehouseTable:
                 # spec lack the current spec's derived partition columns in
                 # their directory layout — recompute them from source
                 # values (deterministic transforms) instead of NULL-filling
-                for pf in self.partition_spec():
+                for pf in spec:
                     if pf.name not in df.columns and pf.source in df.columns:
                         df = df.withColumn(pf.name, pf.expr())
                 # v3 default values: a file written before add_column
@@ -2892,21 +2948,85 @@ class LakehouseTable:
                                 tf.dataType
                             ),
                         )
-                df = project_to_schema(df, target)
-            parts.append(df.withColumn("__seq", F.lit(seq)))
+                df = project_to_schema(
+                    df,
+                    target
+                    if one_seq
+                    else T.StructType(
+                        list(target.fields)
+                        + [T.StructField("__seq", T.LongType())]
+                    ),
+                )
+            if one_seq:
+                df = df.withColumn("__seq", F.lit(seqs.pop()))
+            parts.append(df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=False)
         return out
 
+    @staticmethod
+    def _scan_groups(
+        files: list[dict],
+    ) -> list[tuple[str, str | None, list[dict]]]:
+        """(format, basePath or None, entries) per Spark reader of a scan.
+
+        Flat files — parquet/ORC written by ``_write_files`` (recorded
+        ``spark_schema``), with no partition directories and no imported
+        partition tuple — share one reader per (format, write schema),
+        whatever their write dir or sequence number, and need no
+        basePath. Every other entry reads per (sequence number, write
+        dir, format): a partitioned write keeps its identity values only
+        in directory names, avro has its own reader, an imported tuple
+        joins per group and an ``add_files`` or legacy entry infers its
+        schema from footers. A flat group in which two files share a
+        name (the key of its per-file sequence lookup) falls back to the
+        per-write groups."""
+        groups: dict[tuple, list[dict]] = {}
+        for f in files:
+            fmt = f.get("format", "parquet")
+            base = f.get("base", os.path.dirname(f["path"]))
+            sj = f.get("spark_schema")
+            if (
+                fmt != "avro"
+                and sj
+                and not f.get("partition_values")
+                and os.path.dirname(f["path"]) == base
+            ):
+                key = ("flat", fmt, sj)
+            else:
+                key = ("write", f["seq"], base, fmt)
+            groups.setdefault(key, []).append(f)
+        out = []
+        for key, group in groups.items():
+            if key[0] == "flat":
+                names = {os.path.basename(f["path"]) for f in group}
+                if len(names) == len(group):
+                    out.append((key[1], None, group))
+                    continue
+                by_write: dict[tuple, list[dict]] = {}
+                for f in group:
+                    by_write.setdefault(
+                        (f["seq"], os.path.dirname(f["path"])), []
+                    ).append(f)
+                out.extend(
+                    (key[1], base, g) for (_, base), g in by_write.items()
+                )
+            else:
+                out.append((key[3], key[2], group))
+        return out
+
     def live_files(
-        self, snap: dict | None = None, branch: str = MAIN
+        self,
+        snap: dict | None = None,
+        branch: str = MAIN,
+        meta: dict | None = None,
     ) -> tuple[list[dict], list[dict]]:
         """Public live-file listing: full (data, delete) file entries at a
-        snapshot (default: branch head)."""
-        meta = self.metadata()
+        snapshot (default: branch head) of ``meta`` (one load when None)."""
+        meta = self.metadata() if meta is None else meta
         if snap is None:
-            snap = self.current_snapshot(branch)
+            snap = self.current_snapshot(branch, meta)
             if snap is None:
                 return [], []
         return self._live_files(meta, snap)
@@ -2958,7 +3078,7 @@ class LakehouseTable:
         return vals or None
 
     def _prune_bucket_partitions(
-        self, files: list[dict], where: str
+        self, files: list[dict], where: str, meta: dict | None = None
     ) -> list[dict]:
         """Iceberg bucket-transform pruning: an equality conjunct on an
         ``iceberg_bucket(col, n)`` source keeps only the files whose
@@ -2969,9 +3089,10 @@ class LakehouseTable:
         OR-predicates, and non-equality conjuncts keep everything. Only
         the spec-conformant murmur3 transform participates — the xxhash64
         ``bucket`` has no driver-side hash to evaluate."""
+        meta = self.metadata() if meta is None else meta
         bfields = [
             pf
-            for pf in self.partition_spec()
+            for pf in self.partition_spec(meta)
             if pf.transform == "iceberg_bucket"
         ]
         if not bfields:
@@ -3002,7 +3123,7 @@ class LakehouseTable:
                 vals = self._parse_in_list(m.group("items"))
                 if vals is not None:
                     eqs[m.group("col")] = vals
-        schema_types = {f.name: f.dataType for f in self.schema().fields}
+        schema_types = {f.name: f.dataType for f in self.schema(meta).fields}
         for pf in bfields:
             if pf.source not in eqs:
                 continue
@@ -3061,7 +3182,7 @@ class LakehouseTable:
         tenant, one key range) reads only the new files that can match.
         """
         meta = self.metadata()
-        target = self.read_schema()
+        target = self.read_schema(meta)
         if with_lineage:
             # v3 row lineage: incremental consumers keying downstream
             # state on _row_id get ids that stay stable across rewrites
@@ -3123,7 +3244,7 @@ class LakehouseTable:
         if where is not None:
             files = [f for f in files if file_may_match(f, where)]
         df = self._read_file_group(
-            spark, files, target, with_position=with_lineage
+            spark, files, target, with_position=with_lineage, meta=meta
         )
         if df is None:
             return local_df(spark, [], target)
@@ -3181,7 +3302,7 @@ class LakehouseTable:
         row identities — resolving them to ids would cost a table scan,
         which is exactly what equality deletes avoid)."""
         meta = self.metadata()
-        target = self.read_schema()
+        target = self.read_schema(meta)
         if with_lineage:
             if not _lineage_on(meta.get("properties") or {}):
                 raise ValueError(
@@ -3287,7 +3408,7 @@ class LakehouseTable:
                     in ref_paths
                 ]
                 rows = self._read_file_group(
-                    spark, targets, target, with_position=True
+                    spark, targets, target, with_position=True, meta=meta
                 )
                 if rows is not None:
                     if with_lineage:
@@ -3312,7 +3433,7 @@ class LakehouseTable:
                 # so the changelog's delete rows keep their keys
                 reverse = {
                     alias: canon
-                    for canon, aliases in self.name_mapping().items()
+                    for canon, aliases in self.name_mapping(meta).items()
                     for alias in aliases
                 }
                 for alias, canon in reverse.items():
@@ -3330,7 +3451,7 @@ class LakehouseTable:
                     )
                 )
             rows = self._read_file_group(
-                spark, d, target, with_position=with_lineage
+                spark, d, target, with_position=with_lineage, meta=meta
             )
             if rows is not None:
                 if with_lineage:
@@ -3701,7 +3822,7 @@ class LakehouseTable:
         if LakehouseTable.exists(dst_root):
             raise ValueError(f"table already exists at {dst_root!r}")
         meta = self.metadata()
-        head = self.current_snapshot(branch)
+        head = self.current_snapshot(branch, meta)
         data, deletes = (
             ([], []) if head is None else self._live_files(meta, head)
         )
@@ -4037,7 +4158,7 @@ class LakehouseTable:
         when fewer than two small files exist (nothing to coalesce).
         """
         meta = self.metadata()
-        snap = self.current_snapshot(branch)
+        snap = self.current_snapshot(branch, meta)
         if snap is None:
             return None
         data_files, delete_files = self._live_files(meta, snap)
@@ -4051,25 +4172,30 @@ class LakehouseTable:
             return None
         small_paths = {f["path"] for f in small}
         kept = [f for f in data_files if f["path"] not in small_paths]
-        if self.file_format() == "parquet" and self.lineage_enabled():
+        props = meta["properties"]
+        if _file_format(props) == "parquet" and _lineage_on(props):
             # v3 rewrites preserve row lineage by materializing the fields
             # into the coalesced files (see read_with_lineage); v2 tables
             # skip the position read + extra columns
             target = T.StructType(
-                list(self.read_schema().fields) + list(self.LINEAGE_FIELDS)
+                list(self.read_schema(meta).fields)
+                + list(self.LINEAGE_FIELDS)
             )
             merged = self._read_file_group(
-                spark, small, target, with_position=True
+                spark, small, target, with_position=True, meta=meta
             )
             merged = self._derive_lineage(spark, merged, small)
         else:
             merged = self._read_file_group(
                 spark,
                 small,
-                self.read_schema(),
+                self.read_schema(meta),
                 with_position=_has_positional(delete_files),
+                meta=meta,
             )
-        merged = self._apply_deletes(spark, merged, delete_files).drop(
+        merged = self._apply_deletes(
+            spark, merged, delete_files, meta=meta
+        ).drop(
             "__seq", "__fp", "__pos"
         )
         # position deletes aimed at the rewritten files are FOLDED IN above;
@@ -4079,13 +4205,11 @@ class LakehouseTable:
         # pack to the byte target: without this the rewrite inherits one
         # output file per input split and coalesces nothing
         target = int(
-            self.properties().get(
-                "write.target-file-size-bytes", 128 * 1024 * 1024
-            )
+            props.get("write.target-file-size-bytes", 128 * 1024 * 1024)
         )
         n_out = max(1, -(-sum(f.get("bytes", 0) for f in small) // target))
         merged = merged.coalesce(n_out)
-        new_files = self._write_files(merged, "data")
+        new_files = self._write_files(merged, "data", meta=meta)
         return self._commit_snapshot(
             "replace",
             kept + new_files,
@@ -4131,7 +4255,7 @@ class LakehouseTable:
         procedure, per Iceberg spec's manifest-list compaction story.
         """
         meta = self.metadata()
-        head = self.current_snapshot(branch)
+        head = self.current_snapshot(branch, meta)
         if head is None:
             return None
         depth = 0
@@ -4182,7 +4306,7 @@ class LakehouseTable:
         anti-joins them forever until something prunes them.
         """
         meta = self.metadata()
-        head = self.current_snapshot(branch)
+        head = self.current_snapshot(branch, meta)
         if head is None:
             return None
         data, deletes = self._live_files(meta, head)
@@ -4262,7 +4386,7 @@ class LakehouseTable:
         ``write.distribution-mode`` or ``write.sort-order`` wins. Returns
         the snapshot, or None when no file matches."""
         meta = self.metadata()
-        snap = self.current_snapshot(branch)
+        snap = self.current_snapshot(branch, meta)
         if snap is None:
             return None
         data_files, delete_files = self._live_files(meta, snap)
@@ -4274,13 +4398,16 @@ class LakehouseTable:
         merged = self._read_file_group(
             spark,
             selected,
-            self.read_schema(),
+            self.read_schema(meta),
             with_position=_has_positional(delete_files),
+            meta=meta,
         )
-        merged = self._apply_deletes(spark, merged, delete_files).drop(
+        merged = self._apply_deletes(spark, merged, delete_files, meta=meta).drop(
             "__seq", "__fp", "__pos"
         )
-        new_files = self._write_files(merged, "data", sort_by=sort_by)
+        new_files = self._write_files(
+            merged, "data", sort_by=sort_by, meta=meta
+        )
         return self._commit_snapshot(
             "replace",
             kept + new_files,
@@ -4620,7 +4747,7 @@ class LakehouseTable:
         if mode not in ("full", "incremental"):
             raise ValueError(f"mode must be full|incremental, got {mode!r}")
         meta = self.metadata()
-        snap = self.current_snapshot(branch)
+        snap = self.current_snapshot(branch, meta)
         if snap is None:
             raise ValueError("no snapshot to compute partition stats for")
         sid = snap["snapshot_id"]

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 
 import pytest
 from pyspark.sql import types as T
@@ -140,3 +141,62 @@ def test_metadata_json_bytes_match_the_streaming_encoder(table, spark):
 
         json.dump(doc, Sink())
         assert raw == "".join(chunks)
+
+
+def _ids(spark, lo, hi):
+    return spark.createDataFrame([(i,) for i in range(lo, hi)], SCHEMA)
+
+
+# method → (extra table state it needs, the call)
+HEAD_READERS = {
+    "live_files": (None, lambda t, spark, tmp: t.live_files()),
+    "rewrite_position_deletes": (
+        lambda t, spark: t.delete_where_positions(spark, "id = 2"),
+        lambda t, spark, tmp: t.rewrite_position_deletes(spark),
+    ),
+    "clone_to": (None, lambda t, spark, tmp: t.clone_to(str(tmp / "clone"))),
+    "rewrite_small_files": (
+        None,
+        lambda t, spark, tmp: t.rewrite_small_files(spark, min_file_size=1 << 30),
+    ),
+    "rewrite_manifests": (None, lambda t, spark, tmp: t.rewrite_manifests()),
+    "remove_dangling_deletes": (
+        None,
+        lambda t, spark, tmp: t.remove_dangling_deletes(),
+    ),
+    "rewrite_where": (
+        None,
+        lambda t, spark, tmp: t.rewrite_where(spark, "id >= 0"),
+    ),
+    "column_stats": (None, lambda t, spark, tmp: t.column_stats()),
+    "compute_partition_statistics": (
+        None,
+        lambda t, spark, tmp: t.compute_partition_statistics(),
+    ),
+}
+
+
+@pytest.mark.parametrize("method", sorted(HEAD_READERS))
+def test_head_readers_load_the_head_once(spark, tmp_path, monkeypatch, method):
+    """Each method plans from one head load (its snapshot lookups reuse
+    it); a commit it makes loads once more per attempt inside
+    ``_update_metadata``, which is not counted here."""
+    t = LakehouseTable.create(str(tmp_path / "t"), SCHEMA)
+    t.append(_ids(spark, 0, 4))
+    t.append(_ids(spark, 4, 8))
+    t.upsert(_ids(spark, 1, 2), key_cols=["id"])
+    prep, call = HEAD_READERS[method]
+    if prep is not None:
+        prep(t, spark)
+    callers = []
+    orig = LakehouseTable.metadata
+
+    def counting(self):
+        caller = sys._getframe(1).f_code.co_name
+        if self.root == t.root and caller != "_update_metadata":
+            callers.append(caller)
+        return orig(self)
+
+    monkeypatch.setattr(LakehouseTable, "metadata", counting)
+    call(t, spark, tmp_path)
+    assert callers == [method]
